@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 import graft.config.{AppConfig, Arn, CounterDef}
-import graft.operators.{Counters, JqTransform}
+import graft.operators.{Counters, JqTransform, Overlap}
 import graft.sinks.Sinks
 
 /** The engine facade — what the reference's `App.handler` does per event
@@ -15,11 +16,15 @@ import graft.sinks.Sinks
   * `jq_expr` output transform (O14), and hand each counter's output to its
   * sink (O15).
   *
-  * The reference runs counters as goroutines over the same batch; here each
-  * counter is a declarative query over the same (cacheable) DataFrame —
-  * counters sharing a window width can instead share ONE scan+shuffle via
-  * [[Counters.fanOut]], which is the 100 TB-preferred path when output
-  * schemas align.
+  * The reference runs counters as goroutines over the same decoded batch
+  * (an errgroup, `counter.go:172-198`). [[run]] does the same: when two or
+  * more counters route to a batch input the caller has not persisted, it
+  * persists the input (memory and disk) so the scan, KPL deaggregation and
+  * JSON parse run once per call, submits each counter's sink job from its
+  * own driver thread ([[graft.operators.Overlap.all]]: fail-fast, siblings
+  * cancelled), and unpersists before returning. Nothing is cached across
+  * calls. Counters sharing a window width can instead share one shuffle
+  * too via [[Counters.fanOut]], an opt-in API that `run` does not use.
   */
 object Engine {
 
@@ -59,11 +64,23 @@ object Engine {
       .map(c => c -> pipeline(df, tsCol, c, shardCol, Some(eventSource.toString)))
 
   /** [[process]] + sink each output (O15): the batch-mode equivalent of the
-    * reference's handler → putStateRecord chain.
+    * reference's handler → putStateRecord chain. Sink jobs run
+    * concurrently; counters whose records go to stdout drain one after
+    * another in config order, so their lines never interleave.
     */
   def run(df: DataFrame, tsCol: String, config: AppConfig, eventSource: Arn,
           putter: Sinks.RecordPutter,
-          shardCol: Option[String] = None): Unit =
-    process(df, tsCol, config, eventSource, shardCol)
-      .foreach { case (c, out) => Sinks.write(out, c, putter) }
+          shardCol: Option[String] = None): Unit = {
+    val routed = config.counters.count(_.matchesSource(eventSource, config.arnMatchCompat))
+    val shared = routed >= 2 && !df.isStreaming && df.storageLevel == StorageLevel.NONE
+    if (shared) df.persist()
+    try {
+      val (toStdout, toPutter) = process(df, tsCol, config, eventSource, shardCol)
+        .partition { case (c, _) => Sinks.writesToStdout(c, putter) }
+      val stdoutJob = Option.when(toStdout.nonEmpty)(() =>
+        toStdout.foreach { case (c, out) => Sinks.write(out, c, putter) })
+      Overlap.all(stdoutJob.toSeq ++ toPutter.map { case (c, out) =>
+        () => Sinks.write(out, c, putter) })
+    } finally if (shared) df.unpersist()
+  }
 }

@@ -1,8 +1,10 @@
 package graft.operators
 
-import java.util.concurrent.{Callable, ExecutionException, Executors}
+import java.util.UUID
+import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors,
+  TimeUnit}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Overlap INDEPENDENT jobs inside one query (opt guide §2.6): Spark's
   * scheduler happily runs several jobs at once in one application — the
@@ -29,25 +31,50 @@ import org.apache.spark.sql.DataFrame
   */
 private[graft] object Overlap {
 
-  def checkpointAll(thunks: Seq[() => DataFrame]): Seq[DataFrame] = {
-    if (thunks.lengthCompare(2) < 0) return thunks.map(t => t().localCheckpoint())
+  /** Run `thunks` concurrently, one driver thread each, and return their
+    * results in input order. Fail-fast: the first thunk to fail (in
+    * completion order, not input order) interrupts its siblings, waits for
+    * their threads to leave, cancels every Spark job they started and
+    * rethrows its own exception unwrapped. Fewer than two thunks run on the
+    * caller's thread.
+    *
+    * Pool threads are created per call from the caller's thread, so they
+    * inherit its Spark local properties (job group, scheduler pool) and
+    * its `Console.out`.
+    */
+  def all[T](thunks: Seq[() => T]): Seq[T] = {
+    if (thunks.lengthCompare(2) < 0) return thunks.map(_())
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    // tags every job the thunks start, so a failure can cancel them
+    val tag = s"graft-overlap-${UUID.randomUUID()}"
     // pool sized to the fan-out: sweeps are 2–4 chains; FIFO scheduling
     // gives the earlier chain priority and later chains back-fill its tail
     val pool = Executors.newFixedThreadPool(thunks.size)
+    val done = new ExecutorCompletionService[T](pool)
     try {
-      val futs = thunks.map(t => pool.submit(new Callable[DataFrame] {
-        override def call(): DataFrame = t().localCheckpoint()
+      val futs = thunks.map(t => done.submit(new Callable[T] {
+        override def call(): T = { sc.foreach(_.addJobTag(tag)); t() }
       }))
-      futs.map { f =>
-        try f.get()
+      futs.foreach { _ =>
+        try done.take().get()
         catch {
           case e: ExecutionException =>
-            futs.foreach(_.cancel(true)) // don't leave sibling jobs running
+            // interrupted, a sibling's thread stops submitting jobs but
+            // leaves its running ones behind: cancel them once it is gone
+            futs.foreach(_.cancel(true))
+            pool.shutdown()
+            pool.awaitTermination(1, TimeUnit.MINUTES)
+            sc.foreach(_.cancelJobsWithTag(tag))
             throw e.getCause
         }
       }
+      futs.map(_.get())
     } finally pool.shutdown()
   }
+
+  def checkpointAll(thunks: Seq[() => DataFrame]): Seq[DataFrame] =
+    all(thunks.map(t => () => t().localCheckpoint()))
 
   /** Two-frame convenience overload. */
   def checkpoint2(a: => DataFrame, b: => DataFrame): (DataFrame, DataFrame) = {

@@ -131,10 +131,9 @@ object Sinks {
     * lines, as in CLI mode.
     */
   def write(out: DataFrame, c: CounterDef, putter: RecordPutter): Unit = {
-    val target = c.outputArn
     val rows = toJsonRecords(out)
-    target match {
-      case Some(arn) if arn.service == "kinesis" || arn.service == "firehose" =>
+    serviceTarget(c) match {
+      case Some(arn) =>
         val id = c.id
         rows.foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
           it.foreach(r => putter.put(arn, id, r.getString(0)))
@@ -146,6 +145,15 @@ object Sinks {
           StdoutPutter.put(null, c.id, r.getString(0)))
     }
   }
+
+  private def serviceTarget(c: CounterDef): Option[Arn] =
+    c.outputArn.filter(arn => arn.service == "kinesis" || arn.service == "firehose")
+
+  /** Whether [[write]] sends `c`'s records to stdout: no kinesis/firehose
+    * output ARN, or the putter is [[StdoutPutter]] itself.
+    */
+  private[graft] def writesToStdout(c: CounterDef, putter: RecordPutter): Boolean =
+    serviceTarget(c).isEmpty || (putter eq StdoutPutter)
 
   /** `writeStream.foreachBatch(foreachBatchSink(c, putter))` — the streaming
     * sink wiring (SURVEY.md O15 ↔ Structured Streaming).

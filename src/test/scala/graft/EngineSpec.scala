@@ -1,7 +1,15 @@
 package graft
 
+import java.io.ByteArrayOutputStream
 import java.sql.Timestamp
+import java.util.concurrent.ExecutionException
+import java.util.concurrent.atomic.AtomicBoolean
+
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import org.scalatest.concurrent.Eventually
+import org.scalatest.time.{Seconds, Span}
 
 import graft.config.{Arn, ConfigLoader}
 import graft.operators.{Counters, Intermediate}
@@ -13,7 +21,7 @@ import graft.sources.Deaggregate
   * intermediate-record topology (`counter.go:483-512`), and KPL
   * deaggregation (`deaggregate.go`).
   */
-class EngineSpec extends SparkTestBase {
+class EngineSpec extends SparkTestBase with Eventually {
   import spark.implicits._
 
   private val base = 1638357540000L
@@ -71,6 +79,121 @@ class EngineSpec extends SparkTestBase {
     assert(arn == "arn:aws:kinesis:ap-northeast-1:111122223333:stream/out")
     assert(pk == "all_records")
     assert(data.contains("\"counter_id\":\"all_records\"") && data.contains(s""""value":$n"""))
+  }
+
+  private val out = "arn:aws:kinesis:ap-northeast-1:111122223333:stream/out"
+
+  // count, ACD with jq, and a two-phase count over the shard column
+  private val threeCounters =
+    s"""counters:
+      |  - id: cnt
+      |    input_stream_arn: "arn:aws:kinesis:*:*:stream/in*"
+      |    output_stream_arn: "$out"
+      |    target_column: "*"
+      |    window_duration: 1 minute
+      |  - id: acd_jq
+      |    input_stream_arn: "arn:aws:kinesis:*:*:stream/in*"
+      |    output_stream_arn: "$out"
+      |    target_column: user_id
+      |    counter_type: approx_count_distinct
+      |    window_duration: 1 minute
+      |    jq_expr: '{"t": .window_start, "v": .value, "s": .shard_id}'
+      |  - id: two_phase
+      |    input_stream_arn: "arn:aws:kinesis:*:*:stream/in*"
+      |    output_stream_arn: "$out"
+      |    aggregate_stream_arn: "arn:aws:kinesis:ap-northeast-1:111122223333:stream/agg"
+      |    target_column: "*"
+      |    window_duration: 1 minute
+      |""".stripMargin
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  test("run scans and parses the input once for all routed counters; output ≡ sequential sinks") {
+    val cfg = ConfigLoader.fromYaml(threeCounters).fold(e => fail(e), identity)
+    val cacheManager = spark.sharedState.cacheManager
+    assert(cacheManager.isEmpty, "precondition: no cached data")
+    val scanned = spark.sparkContext.longAccumulator("engine-run-scans")
+    val input = events.as[(Timestamp, Long, Int)]
+      .map { r => scanned.add(1); r }
+      .toDF("ts", "user_id", "shard")
+
+    Sinks.CollectingPutter.drain()
+    Engine.run(input, "ts", cfg, source, new Sinks.CollectingPutter, Some("shard"))
+    val shared = Sinks.CollectingPutter.drain()
+    assert(scanned.sum == n, s"${scanned.sum} rows computed for $n input rows")
+    assert(cacheManager.isEmpty)
+    assert(input.storageLevel == StorageLevel.NONE)
+
+    Engine.process(input, "ts", cfg, source, Some("shard"))
+      .foreach { case (c, o) => Sinks.write(o, c, new Sinks.CollectingPutter) }
+    val sequential = Sinks.CollectingPutter.drain()
+    assert(scanned.sum > 2L * n, "sequential sinks re-scan the input per counter")
+    assert(shared.map(_._2).toSet == Set("cnt", "acd_jq", "two_phase"))
+    assert(shared.sorted == sequential.sorted)
+  }
+
+  test("run leaves an input the caller persisted cached at its own level") {
+    val cfg = ConfigLoader.fromYaml(threeCounters).fold(e => fail(e), identity)
+    val input = events.select($"ts", $"user_id", $"shard").persist(StorageLevel.MEMORY_ONLY)
+    try {
+      Engine.run(input, "ts", cfg, source, Sinks.NullPutter, Some("shard"))
+      assert(input.storageLevel == StorageLevel.MEMORY_ONLY)
+    } finally input.unpersist(blocking = true)
+  }
+
+  test("a failing counter's sink fails run, cancels its siblings and drops the cache") {
+    val cfg = ConfigLoader.fromYaml(threeCounters).fold(e => fail(e), identity)
+    EngineSpec.slowPutStarted.set(false)
+    EngineSpec.slowPutDone.set(false)
+    val t0 = System.nanoTime()
+    val e = intercept[Exception] {
+      Engine.run(events, "ts", cfg, source, new EngineSpec.FailingPutter("two_phase", "cnt"),
+        Some("shard"))
+    }
+    assert(!e.isInstanceOf[ExecutionException] && !e.isInstanceOf[InterruptedException])
+    assert(causes(e).exists(t => String.valueOf(t.getMessage).contains(EngineSpec.Refused)), e)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // cnt's first put was in flight when two_phase failed; uncancelled, it
+    // would hold its job for 30 s
+    eventually(timeout(Span(5, Seconds))) {
+      assert(EngineSpec.slowPutDone.get)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    }
+    assert((System.nanoTime() - t0) / 1e9 < 20)
+  }
+
+  test("stdout fallback: each counter's lines stay contiguous, in config order") {
+    val stdoutYaml =
+      s"""counters:
+        |  - id: first_stdout
+        |    input_stream_arn: "arn:aws:kinesis:*:*:stream/in*"
+        |    target_column: "*"
+        |    window_duration: 1 minute
+        |  - id: to_kinesis
+        |    input_stream_arn: "arn:aws:kinesis:*:*:stream/in*"
+        |    output_stream_arn: "$out"
+        |    target_column: "*"
+        |    window_duration: 1 minute
+        |  - id: second_stdout
+        |    input_stream_arn: "arn:aws:kinesis:*:*:stream/in*"
+        |    target_column: user_id
+        |    counter_type: approx_count_distinct
+        |    window_duration: 1 minute
+        |""".stripMargin
+    val cfg = ConfigLoader.fromYaml(stdoutYaml).fold(e => fail(e), identity)
+    // 30 one-minute windows × 4 shards: 120 records per counter
+    val spread = (0 until n).map(i => (new Timestamp(base + i * 1500L), i.toLong % 50, i % 4))
+      .toDF("ts", "user_id", "shard")
+    val captured = new ByteArrayOutputStream()
+    Sinks.CollectingPutter.drain()
+    Console.withOut(captured) {
+      Engine.run(spread, "ts", cfg, source, new Sinks.CollectingPutter, Some("shard"))
+    }
+    assert(Sinks.CollectingPutter.drain().map(_._2) == Seq.fill(120)("to_kinesis"))
+    val ids = captured.toString("UTF-8").linesIterator
+      .flatMap(l => "\"counter_id\":\"(\\w+)\"".r.findFirstMatchIn(l).map(_.group(1))).toSeq
+    assert(ids == Seq.fill(120)("first_stdout") ++ Seq.fill(120)("second_stdout"))
   }
 
   test("multi-stage jq pipeline flows from YAML config through the engine") {
@@ -169,5 +292,31 @@ class EngineSpec extends SparkTestBase {
       .select(col("seq"), col("data").cast("string"))
       .as[(Long, String)].collect().sorted
     assert(out.toSeq == Seq((1L, "rec0"), (1L, "rec1"), (1L, "rec2"), (2L, "plain")))
+  }
+}
+
+object EngineSpec {
+  val Refused = "put refused for this counter"
+  val slowPutStarted, slowPutDone = new AtomicBoolean
+
+  /** Throws on `failId`'s puts once a put of `slowId` is in flight, so the
+    * failure always meets a running sibling job. That first `slowId` put
+    * blocks for 30 s unless its task is killed; other puts are dropped.
+    */
+  class FailingPutter(failId: String, slowId: String) extends Sinks.RecordPutter {
+    def put(target: Arn, partitionKey: String, data: String): Unit =
+      if (partitionKey == failId) {
+        waitUntil(slowPutStarted.get)
+        throw new IllegalStateException(Refused)
+      } else if (partitionKey == slowId && slowPutStarted.compareAndSet(false, true)) {
+        val ctx = TaskContext.get()
+        // a kill may also interrupt the task thread, ending the sleep early
+        try waitUntil(ctx.isInterrupted()) finally slowPutDone.set(true)
+      }
+  }
+
+  private def waitUntil(cond: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(10)
   }
 }

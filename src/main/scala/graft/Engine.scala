@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project,
+  RepartitionOperation, SubqueryAlias}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.storage.StorageLevel
 
 import graft.config.{AppConfig, Arn, CounterDef}
@@ -17,14 +21,16 @@ import graft.sinks.Sinks
   * sink (O15).
   *
   * The reference runs counters as goroutines over the same decoded batch
-  * (an errgroup, `counter.go:172-198`). [[run]] does the same: when two or
-  * more counters route to a batch input the caller has not persisted, it
-  * persists the input (memory and disk) so the scan, KPL deaggregation and
-  * JSON parse run once per call, submits each counter's sink job from its
-  * own driver thread ([[graft.operators.Overlap.all]]: fail-fast, siblings
-  * cancelled), and unpersists before returning. Nothing is cached across
-  * calls. Counters sharing a window width can instead share one shuffle
-  * too via [[Counters.fanOut]], an opt-in API that `run` does not use.
+  * (an errgroup, `counter.go:172-198`). [[run]] does the same: it submits
+  * each counter's sink job from its own driver thread
+  * ([[graft.operators.Overlap.all]]: fail-fast, siblings cancelled). When
+  * two or more counters route to a batch input that the caller has not
+  * persisted and that does more than read parquet files, it also persists
+  * the input on disk so the scan, KPL deaggregation and JSON parse run
+  * once per call, and unpersists before returning. Nothing is cached
+  * across calls. Counters sharing a window width can instead share one
+  * shuffle too via [[Counters.fanOut]], an opt-in API that `run` does not
+  * use.
   */
 object Engine {
 
@@ -67,13 +73,23 @@ object Engine {
     * reference's handler → putStateRecord chain. Sink jobs run
     * concurrently; counters whose records go to stdout drain one after
     * another in config order, so their lines never interleave.
+    *
+    * With two or more routed counters, an input that is not yet persisted
+    * is read once for all of them, unless it only reads parquet files
+    * ([[readsParquetFiles]]): there each counter's own read prunes to its
+    * columns and takes its filters, where a cache would hold every column.
+    * The shared copy is kept on disk only: cached blocks in memory would
+    * take storage memory that execution cannot evict, and the counters'
+    * aggregations over an input larger than memory then fail where
+    * re-reading the input per counter succeeds.
     */
   def run(df: DataFrame, tsCol: String, config: AppConfig, eventSource: Arn,
           putter: Sinks.RecordPutter,
           shardCol: Option[String] = None): Unit = {
     val routed = config.counters.count(_.matchesSource(eventSource, config.arnMatchCompat))
-    val shared = routed >= 2 && !df.isStreaming && df.storageLevel == StorageLevel.NONE
-    if (shared) df.persist()
+    val shared = routed >= 2 && !df.isStreaming && df.storageLevel == StorageLevel.NONE &&
+      !readsParquetFiles(df.queryExecution.analyzed)
+    if (shared) df.persist(StorageLevel.DISK_ONLY)
     try {
       val (toStdout, toPutter) = process(df, tsCol, config, eventSource, shardCol)
         .partition { case (c, _) => Sinks.writesToStdout(c, putter) }
@@ -82,5 +98,19 @@ object Engine {
       Overlap.all(stdoutJob.toSeq ++ toPutter.map { case (c, out) =>
         () => Sinks.write(out, c, putter) })
     } finally if (shared) df.unpersist()
+  }
+
+  /** Whether `plan` only reads parquet files through projections, filters
+    * and repartitions: Catalyst then prunes each consumer's read to the
+    * columns it uses and pushes its filters into the scan.
+    */
+  private[graft] def readsParquetFiles(plan: LogicalPlan): Boolean = plan match {
+    case _: Project | _: Filter | _: RepartitionOperation | _: SubqueryAlias =>
+      plan.children.forall(readsParquetFiles)
+    case r: LogicalRelation => r.relation match {
+      case fs: HadoopFsRelation => fs.fileFormat.isInstanceOf[ParquetFileFormat]
+      case _ => false
+    }
+    case _ => false
   }
 }

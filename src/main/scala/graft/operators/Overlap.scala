@@ -31,12 +31,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[graft] object Overlap {
 
-  /** Run `thunks` concurrently, one driver thread each, and return their
-    * results in input order. Fail-fast: the first thunk to fail (in
-    * completion order, not input order) interrupts its siblings, waits for
-    * their threads to leave, cancels every Spark job they started and
-    * rethrows its own exception unwrapped. Fewer than two thunks run on the
-    * caller's thread.
+  /** Run `thunks` concurrently and return their results in input order.
+    * At most `max(2, defaultParallelism)` run at once, each on its own
+    * driver thread; the rest queue in input order. Fewer than two thunks
+    * run on the caller's thread.
+    *
+    * Fail-fast: the first thunk to fail in COMPLETION order (not input
+    * order) interrupts its siblings and drops the queued ones, waits up to
+    * one minute for the running ones' threads to leave, cancels every
+    * Spark job they started and rethrows its own exception unwrapped. A
+    * sibling blocked in a Spark action leaves at once; only one in pure
+    * driver-side computation, which ignores interrupts, delays the rethrow
+    * until it next blocks or ends (or the minute is up).
     *
     * Pool threads are created per call from the caller's thread, so they
     * inherit its Spark local properties (job group, scheduler pool) and
@@ -48,9 +54,12 @@ private[graft] object Overlap {
       .map(_.sparkContext)
     // tags every job the thunks start, so a failure can cancel them
     val tag = s"graft-overlap-${UUID.randomUUID()}"
-    // pool sized to the fan-out: sweeps are 2–4 chains; FIFO scheduling
-    // gives the earlier chain priority and later chains back-fill its tail
-    val pool = Executors.newFixedThreadPool(thunks.size)
+    // sweeps are 2–4 chains, Engine.run one job per counter; FIFO
+    // scheduling gives the earlier chain priority and later chains
+    // back-fill its tail. More concurrent jobs than cores only queue
+    // tasks, but two still overlap driver latency on a single core.
+    val slots = sc.fold(Runtime.getRuntime.availableProcessors)(_.defaultParallelism)
+    val pool = Executors.newFixedThreadPool(thunks.size min (slots max 2))
     val done = new ExecutorCompletionService[T](pool)
     try {
       val futs = thunks.map(t => done.submit(new Callable[T] {

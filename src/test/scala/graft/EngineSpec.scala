@@ -1,11 +1,13 @@
 package graft
 
 import java.io.ByteArrayOutputStream
+import java.nio.file.Files
 import java.sql.Timestamp
 import java.util.concurrent.ExecutionException
 import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.spark.TaskContext
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.concurrent.Eventually
@@ -140,6 +142,31 @@ class EngineSpec extends SparkTestBase with Eventually {
       Engine.run(input, "ts", cfg, source, Sinks.NullPutter, Some("shard"))
       assert(input.storageLevel == StorageLevel.MEMORY_ONLY)
     } finally input.unpersist(blocking = true)
+  }
+
+  test("run reads a plain parquet input per counter and caches an input that does per-row work on disk") {
+    val cfg = ConfigLoader.fromYaml(threeCounters).fold(e => fail(e), identity)
+    val dir = Files.createTempDirectory("engine-run-parquet").resolve("events").toString
+    events.select($"ts", $"user_id", $"shard").write.parquet(dir)
+    val parquet = spark.read.parquet(dir)
+    // the CLI's loader: parquet scan, ts normalization and spread repartition
+    assert(Engine.readsParquetFiles(Tables.events(spark, sf0001).queryExecution.analyzed))
+    assert(Engine.readsParquetFiles(
+      parquet.where($"user_id" > 3).repartition(4, $"shard").queryExecution.analyzed))
+
+    EngineSpec.sawCache.set(false)
+    Engine.run(parquet, "ts", cfg, source, new EngineSpec.CacheProbePutter, Some("shard"))
+    assert(!EngineSpec.sawCache.get, "a plain parquet input was cached")
+
+    val parsed = parquet.as[(Timestamp, Long, Int)].map(identity).toDF("ts", "user_id", "shard")
+    assert(!Engine.readsParquetFiles(parsed.queryExecution.analyzed))
+    EngineSpec.sawCacheInMemory.set(false)
+    Engine.run(parsed, "ts", cfg, source, new EngineSpec.CacheProbePutter, Some("shard"))
+    assert(EngineSpec.sawCache.get, "an input with a typed map was not cached")
+    // a cache in memory would shrink the memory the counters' aggregations
+    // can take, failing inputs larger than memory that re-reading counts
+    assert(!EngineSpec.sawCacheInMemory.get, "the shared input was cached in memory")
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("a failing counter's sink fails run, cancels its siblings and drops the cache") {
@@ -312,6 +339,19 @@ object EngineSpec {
         val ctx = TaskContext.get()
         // a kill may also interrupt the task thread, ending the sleep early
         try waitUntil(ctx.isInterrupted()) finally slowPutDone.set(true)
+      }
+  }
+
+  val sawCache, sawCacheInMemory = new AtomicBoolean
+
+  /** Drops every record; notes whether any query was cached while a put
+    * ran, and whether any cached block was held in memory.
+    */
+  class CacheProbePutter extends Sinks.RecordPutter {
+    def put(target: Arn, partitionKey: String, data: String): Unit =
+      SparkSession.getDefaultSession.foreach { s =>
+        if (!s.sharedState.cacheManager.isEmpty) sawCache.set(true)
+        if (s.sparkContext.getRDDStorageInfo.exists(_.memSize > 0)) sawCacheInMemory.set(true)
       }
   }
 

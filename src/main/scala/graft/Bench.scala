@@ -1,6 +1,50 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.core.io.JsonStringEncoder
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Seconds to build `fn` over `dir` and drain it through the `noop` sink,
+    * which materializes every column — a bare `.count()` would let Catalyst
+    * prune the computed projections and time nothing.
+    */
+  def timeNoop(spark: SparkSession, fn: Query, dir: String): Double = {
+    val t0 = System.nanoTime()
+    fn(spark, dir).write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Steady-state reading of `run`: one untimed run absorbs the warm-up
+    * specific to the plan shape (codegen, JIT, broadcast builds, parquet
+    * footer caches; warming only one query charged 10s+ of JVM warm-up to
+    * whichever queries ran first), then the min of two timed runs —
+    * shared-host noise (CPU steal, page cache, GC) is one-sided additive,
+    * so the min is the consistent estimator of the plan's steady cost.
+    */
+  def steady(run: => Double): Double = { run; math.min(run, run) }
+
+  /** `s` as a JSON string literal: quotes, backslashes and every control
+    * character escaped.
+    */
+  def jstr(s: String): String =
+    "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
+
+  /** The queries the comma-separated `only` list (`SPARK_GRAFT_ONLY`;
+    * unset = every query) selects, warning under `tag` about names that
+    * match no query.
+    */
+  def selected(tag: String,
+               only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Map[String, Query] =
+    only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).fold(SparkEntry.queries) { o =>
+      val unknown = o -- SparkEntry.queries.keySet
+      if (unknown.nonEmpty)
+        System.err.println(
+          s"[$tag] WARNING: SPARK_GRAFT_ONLY names unknown queries: ${unknown.mkString(", ")}")
+      if ((o -- unknown).isEmpty)
+        System.err.println(s"[$tag] WARNING: SPARK_GRAFT_ONLY matches no queries — empty run")
+      SparkEntry.queries.filter { case (name, _) => o(name) }
+    }
+
   /** PIDs of this process and its ancestors (the sbt JVM that forked us,
     * its shell, …) — the only java processes allowed to coexist with a
     * bench run. */
@@ -66,40 +110,7 @@ object Bench {
     // number are the same number.
     val guarded = others.isEmpty
     val cpu0 = hostCpuJiffies()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Streaming TEMP checkpoints land in java.io.tmpdir (not
-    // spark.local.dir); point it at the same tmpfs so per-micro-batch
-    // state commits don't pay the shared host disk's fsync latency.
-    // SPARK_LOCAL_DIRS may be a comma list (valid for spark.local.dir) —
-    // tmpdir needs ONE path, so take the first; keep the JVM default if
-    // the dir can't be created (a broken tmpdir fails every temp file).
-    val tmp = new java.io.File(
-      sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark")
-        .split(',').head.trim + "/tmp")
-    if (tmp.isDirectory || tmp.mkdirs())
-      System.setProperty("java.io.tmpdir", tmp.getAbsolutePath)
-    else System.err.println(s"[bench] WARNING: cannot create $tmp; keeping default tmpdir")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pinned in code, not just sbt javaOptions: a jar launched outside
-      // sbt must not silently shift every window boundary to the host TZ
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // DataFrame query-context capture (Spark 4 error-message call sites)
-      // walks the FULL thread stack on every Column API call — pure
-      // driver-side plan-construction overhead at any scale. jstack
-      // sampling showed ~1/3 of the jq recursive-def compile inside
-      // Thread.getStackTrace (r13; deep parser stacks make each capture
-      // O(depth)). Diagnostic-only: error messages lose the user call
-      // site; results and plans are unchanged.
-      .config("spark.sql.dataFrameQueryContext.enabled", "false")
-      // tmpfs for shuffle/spill: the host disk is shared and its latency
-      // variance dominates small-shuffle queries (local SSD stand-in)
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // Watchdog: if a query exceeds 30 s, dump executor stacks once so
     // pathological plans are diagnosable from the bench log itself.
     val watched = new java.util.concurrent.atomic.AtomicReference[String](null)
@@ -134,40 +145,24 @@ object Bench {
     })
     watchdog.setDaemon(true)
     watchdog.start()
-    // optional comma-separated query filter for targeted iteration
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty)
-        System.err.println(
-          s"[bench] WARNING: SPARK_GRAFT_ONLY names unknown queries: ${unknown.mkString(", ")}")
-      if ((o -- unknown).isEmpty)
-        System.err.println("[bench] WARNING: SPARK_GRAFT_ONLY matches no queries — empty run")
-    }
     // A failed query must NEVER masquerade as a fast timing (r5: broken
     // queries recorded 5 ms "results" that SHRANK the total). Track errors
     // per query name; a query with any error is excluded from `value` and
-    // reported under "errors"/"n_failed".
+    // reported under "errors"/"n_failed"; its failed runs read NaN.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Every timed run is BRACKETED by /proc/stat reads: the per-run host
     // busy fraction rides beside the reading, so a noise-inflated number
     // carries its own evidence (round 7 and round 10 both needed a manual
     // solo-rerun adjudication to prove 9–15× artifact inflation was host
     // noise — per-query busy makes that visible in the artifact itself).
-    def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-              tag: String, name: String): (Double, Double) = {
-      // noop sink fully materializes every column — a bare .count() would
-      // let Catalyst prune the computed projections and time nothing.
+    def timed(fn: Query, tag: String, name: String): (Double, Double) = {
       val c0 = hostCpuJiffies()
-      val t0 = System.nanoTime()
       watched.set(tag)
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      val dt = try timeNoop(spark, fn, sfDir) catch { case e: Throwable =>
         System.err.println(s"[bench] $tag: $e")
         errors.getOrElseUpdate(name, e.toString.take(200))
+        Double.NaN
       }
-      val dt = (System.nanoTime() - t0) / 1e9
       val busy = (for { (b0, j0) <- c0; (b1, j1) <- hostCpuJiffies()
                         if j1 > j0 }
         yield (b1 - b0).toDouble / (j1 - j0)).getOrElse(Double.NaN)
@@ -191,18 +186,10 @@ object Bench {
       System.err.println(s"[bench] bench_reference.json unreadable: $e")
       Map.empty
     }
-    val firstPass = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      // Steady-state measurement: an untimed first run absorbs the warm-up
-      // cost specific to THIS plan shape (codegen compilation, JIT,
-      // broadcast builds, parquet footer caches); the second run is the
-      // reported number. Warming only one query charged 10s+ of JVM
-      // warm-up to whichever queries happened to run first.
+    // optional SPARK_GRAFT_ONLY query filter for targeted iteration
+    val firstPass = selected("bench").map { case (name, fn) =>
+      // the `steady` discipline, keeping both readings and the min's busy
       val (wt, _) = timed(fn, s"$name#warm", name)
-      // TWO timed runs, report the min: shared-host noise (CPU steal, page
-      // cache, GC) is one-sided additive, so min is the consistent
-      // estimator of the plan's steady-state cost.
       val (dt1, b1) = timed(fn, name, name)
       val (dt2, b2) = timed(fn, s"$name#2", name)
       val (dt, db) = if (dt1 <= dt2) (dt1, b1) else (dt2, b2)
@@ -254,14 +241,9 @@ object Bench {
           f"reference ${ref.get}%.2fs after retries — real regression or sustained noise")
       name -> (best, bestBusy)
     }.toMap
-    // failed queries are excluded from the timing map and the total — their
-    // "elapsed" is time-to-exception, not a measurement
+    // failed queries are excluded from the timing map and the total
     val withBusy = allTimed.filterNot { case (k, _) => errors.contains(k) }
     val results = withBusy.map { case (k, (sec, _)) => k -> sec }
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
       .mkString("{", ",", "}")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Standing 10× scale artifact: runs the most expensive bench queries at
   * sf0.001 / sf0.01 / sf0.1 (10× data per step) and emits per-scale
@@ -203,24 +202,8 @@ object BenchScale {
 
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_BASE", "/root/testdata")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val tmp = new java.io.File(
-      sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark")
-        .split(',').head.trim + "/tmp")
-    if (tmp.isDirectory || tmp.mkdirs())
-      System.setProperty("java.io.tmpdir", tmp.getAbsolutePath)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // no per-Column stack capture (diagnostic-only; see Bench.scala)
-      .config("spark.sql.dataFrameQueryContext.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session(cpus)
 
     val rows: Map[String, Map[String, Long]] = Scales.map { sf =>
       sf -> Seq("documents", "embeddings", "events", "lineitem").map { t =>
@@ -233,25 +216,17 @@ object BenchScale {
     // "elapsed" would otherwise feed min-of-two and the growth exponent,
     // polluting the per-query stats even though the n_failed gate already
     // fails the run. NaN propagates to `null` cells in SCALING.json.
-    def timed(name: String, sf: String): Double = {
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, s"$base/$sf").write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
+    def timed(name: String, sf: String): Double =
+      try Bench.timeNoop(spark, SparkEntry.queries(name), s"$base/$sf")
+      catch { case e: Throwable =>
         System.err.println(s"[scale] $name@$sf: $e")
         errors.getOrElseUpdate(s"$name@$sf", e.toString.take(200))
         Double.NaN
       }
-    }
 
-    // same steady-state discipline as Bench: untimed warm run, then the
-    // min of two timed runs (host noise is one-sided additive)
     val times: Map[String, Map[String, Double]] = Queries.map { q =>
       q -> Scales.map { sf =>
-        timed(q, sf) // warm
-        val dt = math.min(timed(q, sf), timed(q, sf))
+        val dt = Bench.steady(timed(q, sf))
         System.err.println(f"[scale] $q%-26s $sf%-8s $dt%7.2fs")
         sf -> dt
       }.toMap
@@ -286,7 +261,7 @@ object BenchScale {
          |"assert_pass":${failedGate.isEmpty},
          |"failed_gate":[${failedGate.map("\"" + _ + "\"").mkString(",")}],
          |"n_failed":${errors.size},
-         |"errors":{${errors.map { case (k, v) => s""""$k":"${v.replace("\"", "'")}"""" }.mkString(",")}},
+         |"errors":{${errors.map { case (k, v) => s"${Bench.jstr(k)}:${Bench.jstr(v)}" }.mkString(",")}},
          |"cpus":$cpus}""".stripMargin
     java.nio.file.Files.write(java.nio.file.Paths.get("SCALING.json"),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.config.{AppConfig, Arn, ConfigLoader, CounterDef, CounterType}
 import graft.sinks.Sinks
 
@@ -154,20 +152,7 @@ object Cli {
       case Left(err) => System.err.println(s"[error] $err"); sys.exit(1)
       case Right(c) => c
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // no per-Column stack capture (diagnostic-only; see Bench.scala)
-      .config("spark.sql.dataFrameQueryContext.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // tmpfs for shuffle/spill: the host disk is shared and its latency
-      // variance dominates small-shuffle queries (local SSD stand-in)
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     try {
       val df =
         if (opts.table == "events") Tables.events(spark, opts.input.get)

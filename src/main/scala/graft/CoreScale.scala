@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** CORE-scaling artifact (r13, VERDICT r12 item 5): demonstrates that the
@@ -52,25 +52,9 @@ object CoreScale {
 
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     val amp = sys.env.getOrElse("SPARK_GRAFT_AMP", "8").toInt
-    val tmp = new java.io.File(
-      sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark")
-        .split(',').head.trim + "/tmp")
-    if (tmp.isDirectory || tmp.mkdirs())
-      System.setProperty("java.io.tmpdir", tmp.getAbsolutePath)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // no per-Column stack capture (diagnostic-only; see Bench.scala)
-      .config("spark.sql.dataFrameQueryContext.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(cpus)
 
     // ---- amplified fixture dirs (deterministic; fresh per run) ----
     val dirs = scala.collection.mutable.Map[Int, String]()
@@ -91,19 +75,10 @@ object CoreScale {
     val nDocs = spark.read
       .parquet(s"${ampDir(1)}/documents.parquet").count()
 
-    // ---- time the subset (Bench discipline: warm + min of two) ----
-    def timed(name: String, dir: String): Double = {
-      val fn = SparkEntry.queries(name)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once() // warm (codegen/JIT for this plan shape)
-      math.min(once(), once())
-    }
+    // ---- time the subset ----
     val times = Queries.map { case (q, mult) =>
-      val dt = timed(q, ampDir(mult))
+      val dir = ampDir(mult)
+      val dt = Bench.steady(Bench.timeNoop(spark, SparkEntry.queries(q), dir))
       System.err.println(
         f"[corescale] $q%-26s cpus=$cpus%-3s amp=${amp * mult}%-4d $dt%7.2fs")
       q -> dt
@@ -124,7 +99,7 @@ object CoreScale {
       if (root.has("runs"))
         root.get("runs").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
       else root.putObject("runs")
-    val block = runs.putObject(cpus)
+    val block = runs.putObject(cpus.toString)
     times.foreach { case (q, dt) => block.put(q, dt) }
     // ratios over the lowest/highest core counts present
     import scala.jdk.CollectionConverters._

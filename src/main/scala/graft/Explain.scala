@@ -1,29 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection helper: `runMain graft.Explain q1 q2 …` prints each named
   * query's formatted physical plan, so shuffle/join/codegen choices are
-  * reviewable without editing code. Session config mirrors [[Verify]]
-  * (incl. the UTC timezone, which affects time-expression folding);
-  * defaults to sf0.01 — set `SPARK_GRAFT_SF_DIR` to match the run you are
-  * diagnosing, since AQE decisions are input-size dependent.
+  * reviewable without editing code. It plans in the same [[Session]] as
+  * [[Verify]] (incl. the UTC timezone, which affects time-expression
+  * folding); defaults to sf0.01 — set `SPARK_GRAFT_SF_DIR` to match the
+  * run you are diagnosing, since AQE decisions are input-size dependent.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // no per-Column stack capture (diagnostic-only; see Bench.scala)
-      .config("spark.sql.dataFrameQueryContext.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     args.foreach { name =>
       SparkEntry.queries.get(name) match {
         case Some(fn) =>

@@ -1,13 +1,11 @@
 package graft
 
-import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
-/** Optimization-round diagnostic: runs named queries (args) with the Bench
-  * session config and prints a per-query breakdown of where wall-clock goes —
+/** Optimization diagnostic: runs named queries (args) in a [[Session]]
+  * and prints a per-query breakdown of where wall-clock goes —
   * job/stage wall time, task counts, shuffle bytes, and the GAPS between jobs
   * (driver-side planning/analysis/collect time that no stage accounts for).
   *
@@ -49,23 +47,7 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val tmp = new java.io.File(
-      sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark")
-        .split(',').head.trim + "/tmp")
-    if (tmp.isDirectory || tmp.mkdirs())
-      System.setProperty("java.io.tmpdir", tmp.getAbsolutePath)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // no per-Column stack capture (diagnostic-only; see Bench.scala)
-      .config("spark.sql.dataFrameQueryContext.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val lens = new Lens
     spark.sparkContext.addSparkListener(lens)
     val repeats = sys.env.get("SPARK_GRAFT_PROFILE_REPEATS").map(_.toInt).getOrElse(2)
@@ -74,13 +56,11 @@ object Profile {
         case None => System.err.println(s"unknown query: $name")
         case Some(fn) =>
           // one warm run (codegen/JIT), then profiled runs
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          Bench.timeNoop(spark, fn, sfDir)
           var best = Double.MaxValue
           (1 to repeats).foreach { r =>
             lens.reset()
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            val dt = (System.nanoTime() - t0) / 1e9
+            val dt = Bench.timeNoop(spark, fn, sfDir)
             Thread.sleep(300) // let the listener bus drain
             if (dt < best) best = dt
             println(f"==== $name run$r: wall ${dt}%.3fs ====")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -28,51 +27,22 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // streaming temp checkpoints → tmpfs (same rationale and comma-list
-    // handling as Bench)
-    val tmp = new java.io.File(
-      sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark")
-        .split(',').head.trim + "/tmp")
-    if (tmp.isDirectory || tmp.mkdirs())
-      System.setProperty("java.io.tmpdir", tmp.getAbsolutePath)
-    else System.err.println(s"[verify] WARNING: cannot create $tmp; keeping default tmpdir")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // no per-Column stack capture (diagnostic-only; see Bench.scala)
-      .config("spark.sql.dataFrameQueryContext.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // tmpfs for shuffle/spill: the host disk is shared and its latency
-      // variance dominates small-shuffle queries (local SSD stand-in)
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated filter for targeted local iteration; the
-    // driver sets nothing and always dumps every query
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // Per-query audit trail, appended AS WE GO: a mid-run kill (driver
     // budget death) still leaves the full enumeration of what passed and
     // what threw — round 5's correctness came back `{}` with no trace.
     val statusPath = Paths.get(s"$outDir/status.jsonl")
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     def status(name: String, ok: Boolean, msg: String): Unit = {
-      val line = s"""{"query":${jstr(name)},"status":"${if (ok) "ok" else "failed"}"""" +
-        (if (msg.nonEmpty) s""","error":${jstr(msg.take(300))}}""" else "}")
+      val line = s"""{"query":${Bench.jstr(name)},"status":"${if (ok) "ok" else "failed"}"""" +
+        (if (msg.nonEmpty) s""","error":${Bench.jstr(msg.take(300))}}""" else "}")
       try Files.writeString(statusPath, line + "\n",
         java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
       catch { case _: Throwable => () }
     }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    // optional SPARK_GRAFT_ONLY filter for targeted local iteration;
+    // unset, every query is dumped
+    Bench.selected("verify").foreach { case (name, fn) =>
       try {
         canonicalize(fn(spark, sfDir)).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -82,20 +52,8 @@ object Verify {
         status(name, ok = false, String.valueOf(e.getMessage))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

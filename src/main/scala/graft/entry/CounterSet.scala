@@ -121,7 +121,7 @@ private[graft] object CounterSet {
     // through Structured Streaming (file-stream source → tumbling window →
     // memory sink) must hash-match the batch oracle — batch/stream
     // semantic unification, end to end
-    "c16_streaming_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "c16_streaming_parity" -> ((s, dir) => withStatePartitions(s) {
       val c = cRequestCount.copy(id = "request_count_stream")
       val out = graft.streaming.StreamingCounters.run(
         Tables.eventsStream(s, dir), "ts", c)
@@ -135,7 +135,7 @@ private[graft] object CounterSet {
     // CounterState path (state carried per window, emitted on the
     // event-time timeout = final invoke) must hash-match the batch oracle
     // for every window the watermark closed — all but the stream's last
-    "c17_custom_state_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "c17_custom_state_parity" -> ((s, dir) => withStatePartitions(s) {
       val c = cRequestCount.copy(id = "request_count_state")
       val out = graft.streaming.StreamingCounters.runCustomState(
         Tables.eventsStream(s, dir), "ts", c,
@@ -173,7 +173,7 @@ private[graft] object CounterSet {
     // O2 on Spark 4's transformWithState (the modern arbitrary-state API:
     // named ValueState + explicit event-time timers, RocksDB-backed),
     // oracle-checked against the same watermark-closed-window bound as c17
-    "c29_tws_state_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "c29_tws_state_parity" -> ((s, dir) => withStatePartitions(s) {
       withRocksDb(s) {
         val c = cRequestCount.copy(id = "request_count_tws")
         val out = graft.streaming.StreamingCounters.runCustomStateTws(
@@ -197,7 +197,7 @@ private[graft] object CounterSet {
     // the HDFS provider's delta commits save at this state size. The
     // default provider stands (closes the r13 "not attempted" item with
     // a measurement).
-    "c28_interval_join_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "c28_interval_join_parity" -> ((s, dir) => withStatePartitions(s) {
       val out = graft.streaming.StreamingJoins.purchaseClickPairs(
         Tables.eventsStream(s, dir))
       val sink = "c28_interval_join_sink"
@@ -211,7 +211,7 @@ private[graft] object CounterSet {
     // micro-batch) and the weighted counts aggregate per window — the
     // third streaming-join class beside c28's stream-stream interval
     // join and t30/t33's broadcast-model literals
-    "c51_stream_static_enrich" -> ((s, dir) => withStatePartitions(s, 8) {
+    "c51_stream_static_enrich" -> ((s, dir) => withStatePartitions(s) {
       import s.implicits._
       val dim = Seq(("click", 1L), ("view", 2L), ("purchase", 5L),
         ("signup", 3L), ("error", 0L)).toDF("event_type", "weight")
@@ -238,7 +238,7 @@ private[graft] object CounterSet {
     // watermark pipeline (target_expr + jq) → RecordPutter sinks; the
     // emitted sink RECORDS (not a query handle) parse back and must
     // hash-match the relational oracle for every closed window
-    "c52_stream_engine_e2e" -> ((s, dir) => withStatePartitions(s, 8) {
+    "c52_stream_engine_e2e" -> ((s, dir) => withStatePartitions(s) {
       import org.apache.spark.sql.types._
       val yaml =
         """counters:
@@ -332,7 +332,7 @@ private[graft] object CounterSet {
     // ONE streaming aggregation (single state store) + one generator
     // unpivot; every watermark-closed window hash-matches the batch
     // fan-out oracle
-    "c24_fanout_streaming_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "c24_fanout_streaming_parity" -> ((s, dir) => withStatePartitions(s) {
       val cs = Seq(
         cRequestCount.copy(id = "request_count_fo_stream"),
         cClickCount.copy(id = "click_count_fo_stream"))
@@ -348,7 +348,7 @@ private[graft] object CounterSet {
     // to intermediate-record JSON (the aggregate-stream payload), CONSUMED
     // via readStream → parse/filter/version-gate → merge per window —
     // the reference's two-job topology (counter.go:348-412) end to end
-    "c23_intermediate_streaming_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "c23_intermediate_streaming_parity" -> ((s, dir) => withStatePartitions(s) {
       val c = cRequestCount.copy(id = "request_count_rt_stream")
       val sharded = events(s, dir).withColumn("shard", pmod(col("user_id"), lit(8)))
       // per-application path: concurrent runs on one host must not clobber
@@ -380,7 +380,7 @@ private[graft] object CounterSet {
     // sliding windows through Structured Streaming, oracle-checked like
     // c17: every overlapping bucket the watermark closed must hash-match
     // the batch sliding result
-    "c22_sliding_streaming_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "c22_sliding_streaming_parity" -> ((s, dir) => withStatePartitions(s) {
       val c = cRequestCount.copy(id = "sliding_count_stream")
       val out = graft.streaming.StreamingCounters.runSliding(
         Tables.eventsStream(s, dir), "ts", c,
@@ -395,7 +395,7 @@ private[graft] object CounterSet {
     // c17: zero-delay watermark closes every session whose reach (last
     // event + gap) precedes the stream's max event time; the oracle
     // mirrors with the same HAVING bound
-    "c21_session_streaming_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "c21_session_streaming_parity" -> ((s, dir) => withStatePartitions(s) {
       val c = cRequestCount.copy(id = "session_events_stream")
       val out = graft.streaming.StreamingCounters.runSessions(
         Tables.eventsStream(s, dir), "ts", "user_id", c,
@@ -844,7 +844,7 @@ private[graft] object CounterSet {
         eventsLean(s, dir).withColumn("shard", pmod(col("user_id"), lit(4))),
         "ts", "shard", cValueMin)),
     // ...and value_min's STREAMING face via the generic windowed-agg path
-    "c60_min_streaming_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "c60_min_streaming_parity" -> ((s, dir) => withStatePartitions(s) {
       val c = cValueMin.copy(id = "value_min_stream")
       val out = graft.streaming.StreamingCounters.run(
         Tables.eventsStream(s, dir), "ts", c, watermarkDelay = "0 seconds")
@@ -869,7 +869,7 @@ private[graft] object CounterSet {
     // ...and its STREAMING face: the generic windowed-agg path (aggExpr
     // composes into the watermark aggregation unchanged) — rows must
     // hash-match the batch counter for every closed window
-    "c50_sum_streaming_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "c50_sum_streaming_parity" -> ((s, dir) => withStatePartitions(s) {
       val c = cValueSum.copy(id = "revenue_cents_stream")
       val out = graft.streaming.StreamingCounters.run(
         Tables.eventsStream(s, dir), "ts", c, watermarkDelay = "0 seconds")
@@ -882,7 +882,7 @@ private[graft] object CounterSet {
     // STREAMING face of the value_quantile counter: append-mode histogram
     // state, pick per closed window — rows must hash-match the batch
     // counter for every window the watermark closed (all but the last)
-    "c42_quantile_streaming_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "c42_quantile_streaming_parity" -> ((s, dir) => withStatePartitions(s) {
       val c = cValueP90.copy(id = "value_p90_stream")
       val hist = graft.streaming.StreamingCounters.counterHistogram(
         Tables.eventsStream(s, dir), "ts", c, watermarkDelay = "0 seconds")
@@ -894,7 +894,7 @@ private[graft] object CounterSet {
     }),
     // STREAMING face of the heavy_hitters counter: member-count state,
     // rank per closed window — same closed-window parity bar
-    "c43_hitter_streaming_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "c43_hitter_streaming_parity" -> ((s, dir) => withStatePartitions(s) {
       val c = cTopUsers.copy(id = "top_users_stream")
       val counts = graft.streaming.StreamingCounters.counterMemberCounts(
         Tables.eventsStream(s, dir), "ts", c, watermarkDelay = "0 seconds")

@@ -65,7 +65,7 @@ private[graft] object DedupSet {
     // streaming face of d28's repeated-gram detection: each gram digest
     // emits exactly once, on its SECOND sighting — the emitted SET is
     // arrival-independent and ≡ the batch repeated-gram table
-    "d29_stream_repeated_grams" -> ((s, dir) => withStatePartitions(s, 8) {
+    "d29_stream_repeated_grams" -> ((s, dir) => withStatePartitions(s) {
       withRocksDb(s) {
         val stream = Tables.spreadStream(Tables.documentsStream(s, dir),
             s"$dir/documents.parquet", col("doc_id"))
@@ -98,7 +98,7 @@ private[graft] object DedupSet {
     // filter is arrival/batch-boundary independent), probed batch-side
     // with the same exact accounting — the zero-FN theorem certifies the
     // streamed state path lost no bits
-    "d32_stream_bloom_seen" -> ((s, dir) => withStatePartitions(s, 8) {
+    "d32_stream_bloom_seen" -> ((s, dir) => withStatePartitions(s) {
       val d = Tables.documents(s, dir)
       def url(c: Column) =
         concat(lit("https://ex.com/p"), (c % 301).cast("string"))
@@ -220,7 +220,7 @@ private[graft] object DedupSet {
     // dataset makes within-watermark dedup ≡ global DISTINCT, and keying
     // the OUTPUT by content digest (not row identity) makes the result
     // independent of which arrival won the first-occurrence race
-    "d14_stream_dedup_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "d14_stream_dedup_parity" -> ((s, dir) => withStatePartitions(s) {
       val deduped = graft.streaming.StreamingDedup.dropExactDuplicates(
         Tables.eventsStream(s, dir), "ts", "props", watermarkDelay = "3650 days")
       // null-props rows pass through dedup untouched by design; the oracle
@@ -238,7 +238,7 @@ private[graft] object DedupSet {
     // stage): d25's raw fetch variants arrive as a stream, canonicalize,
     // first arrival per canonical URL survives — the surviving URL SET
     // is arrival-independent and ≡ batch DISTINCT canonical urls
-    "d27_stream_url_dedup" -> ((s, dir) => withStatePartitions(s, 8) {
+    "d27_stream_url_dedup" -> ((s, dir) => withStatePartitions(s) {
       val stream = Tables.spreadStream(Tables.documentsStream(s, dir),
           s"$dir/documents.parquet", col("doc_id"))
         .withColumn("ts", timestamp_micros(col("doc_id") + lit(86400000000L)))
@@ -256,7 +256,7 @@ private[graft] object DedupSet {
     // recomputed bucket ids of the survivors ≡ the distinct bucket set
     // (which doc won each bucket is arrival-dependent; the bucket set
     // is not)
-    "d15_stream_neardup_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "d15_stream_neardup_parity" -> ((s, dir) => withStatePartitions(s) {
       val stream = Tables.embeddingsStream(s, dir)
         .withColumn("ts", timestamp_micros(col("vec_id")))
       val kept = graft.streaming.StreamingDedup.dropNearDuplicatesWithinWatermark(
@@ -276,7 +276,7 @@ private[graft] object DedupSet {
     // pair set (d10), so the anti-joined survivors are deterministic —
     // unlike d15, which docs win is NOT arrival-dependent here, because
     // only genuine cosine-near-dups (vs the EARLIER doc by (ts, id)) drop
-    "d16_stream_neardup_verified" -> ((s, dir) => withStatePartitions(s, 8) {
+    "d16_stream_neardup_verified" -> ((s, dir) => withStatePartitions(s) {
       withRocksDb(s) {
         // +1 day: an event time EQUAL to the initial watermark (epoch 0)
         // is filtered as late by transformWithState's strict > check —

@@ -93,16 +93,6 @@ private[graft] object EntryHelpers {
     */
   private[graft] val Bm25Query = Seq("dup", "scan", "key")
 
-
-
-  /** Stateful-stream state sizing: `spark.sql.shuffle.partitions` is ALSO
-    * the stateful-operator state-store count, and a real deployment sizes
-    * it per stream volume, not per batch parallelism — every micro-batch
-    * commits every store, so 32 stores for a trickle stream is pure
-    * overhead (measured ~1.5× on the parity queries). The streaming parity
-    * queries run their stream under `n` partitions and restore the
-    * session's batch setting after.
-    */
   /** Run `body` with one session-conf key overridden, restoring (or
     * unsetting) it after — the scoped-config primitive the streaming
     * queries use for state sizing and store-provider selection.
@@ -113,8 +103,9 @@ private[graft] object EntryHelpers {
     try body finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
   }
 
-  private[graft] def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T =
-    withConf(s, "spark.sql.shuffle.partitions", n.toString)(body)
+  /** Run `body` with [[Session.StatePartitions]] state stores. */
+  private[graft] def withStatePartitions[T](s: SparkSession)(body: => T): T =
+    withConf(s, "spark.sql.shuffle.partitions", Session.StatePartitions.toString)(body)
 
   /** Scoped RocksDB state store for the `transformWithState` faces, WITH
     * changelog checkpointing (r13, opt guide §5): without it every

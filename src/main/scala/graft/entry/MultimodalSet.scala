@@ -261,7 +261,7 @@ private[graft] object MultimodalSet {
     // collision-free under 3328 keys), so each group survives as exactly
     // 3 digests; the surviving (resource, digest) SET is
     // arrival-independent, the d15/d27 parity shape.
-    "m19_stream_media_dedup" -> ((s, dir) => withStatePartitions(s, 8) {
+    "m19_stream_media_dedup" -> ((s, dir) => withStatePartitions(s) {
       import s.implicits._
       // collision-freedom guard, ENFORCED not assumed (round 11 widened
       // the key space per ADVICE r10): two resources share a raster iff

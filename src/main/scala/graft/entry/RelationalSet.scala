@@ -200,7 +200,7 @@ private[graft] object RelationalSet {
     // order under the watermark, so the z² flagging half runs per batch
     // over the accumulated closed hours and must match batch e06 rows
     // for every closed hour
-    "e12_stream_spikes_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "e12_stream_spikes_parity" -> ((s, dir) => withStatePartitions(s) {
       val counts = Tables.eventsStream(s, dir).withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"))
@@ -220,7 +220,7 @@ private[graft] object RelationalSet {
     // 1.51 s, OLD ≤ NEW in all three interleaved pairs) — the HDFS
     // provider's delta commit is already cheap at this state size and the
     // RocksDB instance init isn't. Default provider stands.
-    "e17_stream_mad_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "e17_stream_mad_parity" -> ((s, dir) => withStatePartitions(s) {
       val counts = Tables.eventsStream(s, dir).withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"))
@@ -237,7 +237,7 @@ private[graft] object RelationalSet {
     // function of the accumulated closed-hour table, so flags match
     // batch e21 computed over the closed subset (the final unclosed
     // hour per type never emits, the c23 eviction convention)
-    "e22_stream_cusum_parity" -> ((s, dir) => withStatePartitions(s, 8) {
+    "e22_stream_cusum_parity" -> ((s, dir) => withStatePartitions(s) {
       val counts = Tables.eventsStream(s, dir).withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"))
@@ -259,7 +259,7 @@ private[graft] object RelationalSet {
     // session_window's merge is INCLUSIVE at the gap reach — e05's
     // gap ≤ g convention exactly (spec-proved on an exact-gap tie), so
     // the oracle is e05's gaps-and-islands verbatim, closed-restricted
-    "e23_stream_sessions" -> ((s, dir) => withStatePartitions(s, 8) {
+    "e23_stream_sessions" -> ((s, dir) => withStatePartitions(s) {
       val sessions = graft.streaming.StreamingCounters.analyticSessionStream(
         Tables.eventsStream(s, dir), "ts", "user_id")
       val sink = "e23_sess_sink"
@@ -295,7 +295,7 @@ private[graft] object RelationalSet {
     // machinery — e13's rows restricted to closed windows, with the
     // ε-verdict measuring the STREAMED sketch (cross-micro-batch merge
     // order and all)
-    "e19_stream_quantile_sketch" -> ((s, dir) => withStatePartitions(s, 8) {
+    "e19_stream_quantile_sketch" -> ((s, dir) => withStatePartitions(s) {
       withRocksDb(s) {
         val summaries = graft.streaming.StreamingCounters.quantileSketchStream(
           Tables.eventsStream(s, dir), "ts")
@@ -354,7 +354,7 @@ private[graft] object RelationalSet {
     // watermarked windowed agg (no custom state — CMS cells ARE what
     // Spark's streaming agg maintains), emitted on window close, gated
     // by the same batch-side machinery on exactly the closed windows
-    "e25_stream_cms_counters" -> ((s, dir) => withStatePartitions(s, 8) {
+    "e25_stream_cms_counters" -> ((s, dir) => withStatePartitions(s) {
       // native windowed agg → default state store, the e12/e17/e22
       // convention (RocksDB is the transformWithState faces' choice)
       val counters = graft.streaming.StreamingCounters.cmsCounterStream(
@@ -376,7 +376,7 @@ private[graft] object RelationalSet {
     // summary as transformWithState state, emitted on window close, then
     // gated by the same exact-side machinery — with e19 this closes the
     // counter-type × topology matrix (every type now streams)
-    "e20_stream_hitter_sketch" -> ((s, dir) => withStatePartitions(s, 8) {
+    "e20_stream_hitter_sketch" -> ((s, dir) => withStatePartitions(s) {
       withRocksDb(s) {
         val summaries = graft.streaming.StreamingCounters.hitterSketchStream(
           Tables.eventsStream(s, dir), "ts")

@@ -160,6 +160,10 @@ class EngineSpec extends SparkTestBase with Eventually {
 
     val parsed = parquet.as[(Timestamp, Long, Int)].map(identity).toDF("ts", "user_id", "shard")
     assert(!Engine.readsParquetFiles(parsed.queryExecution.analyzed))
+    // the probe sees every RDD in the context: drop blocks earlier suites
+    // left behind (a localCheckpoint keeps its copy in memory until the RDD
+    // is garbage-collected), so only this run's caching is judged
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     EngineSpec.sawCacheInMemory.set(false)
     Engine.run(parsed, "ts", cfg, source, new EngineSpec.CacheProbePutter, Some("shard"))
     assert(EngineSpec.sawCache.get, "an input with a typed map was not cached")

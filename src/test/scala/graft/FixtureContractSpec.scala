@@ -14,8 +14,13 @@ import org.apache.spark.sql.types._
   */
 class FixtureContractSpec extends SparkTestBase {
 
-  test("session time zone is pinned to UTC (NTZ→LTZ cast exactness depends on it)") {
+  test("session carries graft.Session's confs (UTC: NTZ→LTZ casts need it)") {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.extensions") == "graft.GraftExtensions")
+    assert(spark.conf.get("spark.sql.dataFrameQueryContext.enabled") == "false")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    assert(spark.sparkContext.master == "local[4]")
+    assert(Session.StatePartitions == 8)
   }
 
   test("events loads with ts as TimestampType regardless of fixture physical type") {

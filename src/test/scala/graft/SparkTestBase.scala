@@ -7,23 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * suite fast; tests must not mutate global session state).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // no per-Column stack capture (diagnostic-only; see Bench.scala)
-      .config("spark.sql.dataFrameQueryContext.enabled", "false")
-      // tmpfs for shuffle/spill: the host disk is shared and its latency
-      // variance dominates small-shuffle queries (local SSD stand-in)
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session(4)
 }
 
 abstract class SparkTestBase extends AnyFunSuite {

@@ -101,11 +101,13 @@ final class FileShardClient(path: String, permissive: Boolean)
                                          hints: ReadHints)
       extends RecordIterator {
     private val mapper = new ObjectMapper
-    private val in = new TerminatedLineReader(file)
-    // GetShardIterator(AT from): skip the already-consumed prefix
-    locally {
-      var skipped = 0L
-      while (skipped < from && in.readLine() != null) skipped += 1
+    // GetShardIterator(AT from): open at the warm seek mark at or below
+    // `from` (byte 0 when cold) and byte-skip the rest of the prefix
+    private val in = {
+      val (pos, lines) = ShardScan.seekMark(file, from)
+      val r = new TerminatedLineReader(file, pos)
+      r.skipLines(from - lines)
+      r
     }
 
     override def nextRecord(): WireRecord = {

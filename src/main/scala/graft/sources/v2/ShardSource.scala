@@ -1,9 +1,10 @@
 package graft.sources.v2
 
-import java.io.{BufferedReader, File, FileInputStream, InputStreamReader}
+import java.io.{File, FileInputStream}
 import java.nio.charset.StandardCharsets
 import java.util.Base64
 
+import scala.collection.immutable.TreeMap
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -137,8 +138,23 @@ object ShardScan {
   // line. A torn tail never advances the clean position, so it is
   // re-scanned (cheaply) until its newline lands; truncation (contract
   // violation) falls back to a full recount.
-  private val counts =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Object)]
+  //
+  // The reader side has the same problem: every micro-batch starts at an
+  // earlier latestOffset result, and skipping that prefix from byte 0
+  // makes each batch O(log size) too. So each scan also leaves a seek
+  // mark (lines → clean byte position) in the file's tally, at most
+  // MaxMarks of them, and [[seekMark]] hands a reader the floor mark at
+  // or below its start line: in a warm JVM a batch opens the file right
+  // at its first record. A recount from 0 starts a fresh tally, so a
+  // shrink or identity change drops the marks with the count; a reader
+  // also ignores a mark past the current length or under another
+  // identity. A truncate-and-regrow that no scan observed is invisible
+  // to marks and counts alike. A cold executor JVM has no marks and
+  // byte-skips from 0 (see [[TerminatedLineReader.skipLines]]).
+  private final case class Tally(id: Object, clean: Long, lines: Long,
+                                 marks: TreeMap[Long, Long])
+  private val MaxMarks = 256
+  private val counts = new java.util.concurrent.ConcurrentHashMap[String, Tally]
 
   /** The file's identity beyond its path: (dev, inode) on POSIX via
     * `fileKey`, null where unsupported. A shard log deleted and recreated
@@ -163,58 +179,56 @@ object ShardScan {
     lock.synchronized {
       val len = new File(file).length()
       val id = identityOf(file)
-      val cached = counts.getOrDefault(file, (0L, 0L, null))
+      val cached = counts.get(file)
       // full recount on shrink (truncation) OR identity change (same-path
       // replacement) — both are append-only-contract violations to recover
       // from, never to silently extend
-      val fresh = len >= cached._1 && cached._3 == id
-      val (start, startLines) = if (fresh) (cached._1, cached._2) else (0L, 0L)
-      if (fresh && len == start) startLines
+      val fresh = cached != null && len >= cached.clean && cached.id == id
+      if (fresh && len == cached.clean) cached.lines
       else {
-        val result = scan(file, start, startLines)
-        counts.put(file, (result._1, result._2, id))
-        result._2
+        val from = if (fresh) cached else Tally(id, 0L, 0L, TreeMap.empty)
+        val (clean, lines) = scan(file, from.clean, from.lines)
+        val marks = from.marks.updated(lines, clean)
+        counts.put(file, Tally(id, clean, lines,
+          if (marks.size > MaxMarks) marks.tail else marks))
+        lines
       }
     }
   }
 
-  /** THE one definition of "non-empty terminated line count": byte-scan
-    * from `start` (a clean line boundary; `startLines` lines precede it),
-    * returning (position just past the last terminator, line count). A
-    * line counts iff it has any byte > 0x20 (`String.trim` semantics —
-    * UTF-8 continuation bytes are ≥ 0x80 so multi-byte text counts); an
-    * unterminated tail never advances the clean position. Offsets, putter
-    * sequence seeding and the partition reader all agree because the
-    * reader's [[TerminatedLineReader]] applies the same rules line-wise.
+  /** Where a reader of `file` starting at record `line` can open it:
+    * (byte position, lines before it) of the floor seek mark, or (0, 0)
+    * when there is none or the file is no longer the one it was taken on.
+    */
+  def seekMark(file: String, line: Long): (Long, Long) = {
+    val tally = counts.get(file)
+    if (tally == null) return (0L, 0L)
+    tally.marks.maxBefore(line + 1) match {
+      case Some((lines, pos))
+          if pos <= new File(file).length() && tally.id == identityOf(file) =>
+        (pos, lines)
+      case _ => (0L, 0L)
+    }
+  }
+
+  /** Forgets every seek mark (counts stay), so the next reads byte-skip
+    * from 0 as a cold executor JVM does.
+    */
+  private[graft] def dropSeekMarks(): Unit =
+    counts.replaceAll((_, t) => t.copy(marks = TreeMap.empty))
+
+  /** Byte-scan from `start` (a clean line boundary; `startLines` lines
+    * precede it), returning (position just past the last terminator, line
+    * count): [[TerminatedLineReader.skipLines]] to EOF. That byte loop is
+    * THE one definition of "non-empty terminated line" — offsets, putter
+    * sequence seeding, seek marks and the partition reader all agree
+    * because they all run it.
     */
   private def scan(file: String, start: Long, startLines: Long): (Long, Long) = {
-    val in = new FileInputStream(file)
+    val in = new TerminatedLineReader(file, start)
     try {
-      var toSkip = start
-      while (toSkip > 0) {
-        val s = in.skip(toSkip)
-        if (s <= 0) throw new java.io.IOException(s"cannot seek $file to $start")
-        toSkip -= s
-      }
-      var pos = start; var clean = start; var lines = startLines
-      var lineNonEmpty = false
-      val buf = new Array[Byte](64 * 1024)
-      var n = in.read(buf)
-      while (n != -1) {
-        var i = 0
-        while (i < n) {
-          val b = buf(i)
-          pos += 1
-          if (b == '\n') {
-            if (lineNonEmpty) lines += 1
-            lineNonEmpty = false
-            clean = pos
-          } else if ((b & 0xff) > 0x20) lineNonEmpty = true
-          i += 1
-        }
-        n = in.read(buf)
-      }
-      (clean, lines)
+      val lines = startLines + in.skipLines(Long.MaxValue)
+      (in.clean, lines)
     } finally in.close()
   }
 }
@@ -225,25 +239,104 @@ object ShardScan {
   * surface it as a complete line, making `lineCount` and the partition
   * reader disagree with the appender. Both sides share this reader so the
   * unfinished tail is invisible until its newline lands.
+  *
+  * Byte-level: reads 64 KB blocks, splits on `'\n'` and decodes only the
+  * lines it returns (malformed UTF-8 becomes U+FFFD). A line counts iff it
+  * has a byte > 0x20 — `String.trim` semantics, since UTF-8 lead and
+  * continuation bytes are ≥ 0x80 — and a trailing `\r` is stripped.
+  * Opens `file` at byte `start`, which must be a line boundary.
   */
-private[v2] final class TerminatedLineReader(file: String) {
-  private val in = new BufferedReader(new InputStreamReader(
-    new FileInputStream(file), StandardCharsets.UTF_8))
-  private val sb = new java.lang.StringBuilder
+private[v2] final class TerminatedLineReader(file: String, start: Long = 0L) {
+  private val in = new FileInputStream(file)
+  if (start > 0) {
+    val ch = in.getChannel
+    if (start > ch.size()) {
+      in.close()
+      throw new java.io.IOException(s"cannot seek $file to $start")
+    }
+    ch.position(start)
+  }
+  private var buf = new Array[Byte](TerminatedLineReader.BlockBytes)
+  private var base = start   // file position of buf(0)
+  private var next = 0       // first unconsumed byte of buf
+  private var filled = 0     // bytes held in buf
+  private var lineStart = 0  // buf index of the current line's first byte
+  private var nonBlank = false // the current line has a byte > 0x20 so far
+  private var cleanPos = start
+  private var lastFrom = 0   // buf range of the last line passed
+  private var lastUntil = 0
+
+  /** File position just past the last terminator consumed. */
+  def clean: Long = cleanPos
 
   /** Next non-empty terminated line, or null at (possibly torn) EOF. */
-  def readLine(): String = {
-    while (true) {
-      sb.setLength(0)
-      var c = in.read()
-      while (c != -1 && c != '\n') { sb.append(c.toChar); c = in.read() }
-      if (c == -1) return null // unterminated tail (or clean EOF): not a line
-      val line = sb.toString.stripSuffix("\r")
-      if (line.trim.nonEmpty) return line
+  def readLine(): String =
+    if (pass(1L, keep = true) == 0L) null
+    else {
+      val until =
+        if (lastUntil > lastFrom && buf(lastUntil - 1) == '\r') lastUntil - 1
+        else lastUntil
+      new String(buf, lastFrom, until - lastFrom, StandardCharsets.UTF_8)
     }
-    null // unreachable
+
+  /** Passes up to `k` non-empty terminated lines without copying or
+    * decoding them; returns how many it passed (fewer only at EOF).
+    */
+  def skipLines(k: Long): Long = pass(k, keep = false)
+
+  // The one byte loop. Stops just past the k-th counted line's '\n'. With
+  // `keep`, the current line's bytes survive a refill (slid to the front
+  // of buf, which doubles when one line fills it), so a returned line is
+  // always buf[lastFrom, lastUntil).
+  private def pass(k: Long, keep: Boolean): Long = {
+    var passed = 0L
+    while (passed < k) {
+      if (next == filled && !fill(keep)) return passed
+      val b = buf
+      val end = filled
+      var i = next
+      while (i < end && passed < k) {
+        val c = b(i)
+        if (c == '\n') {
+          if (nonBlank) {
+            passed += 1
+            lastFrom = lineStart
+            lastUntil = i
+          }
+          nonBlank = false
+          lineStart = i + 1
+          cleanPos = base + i + 1
+        } else if ((c & 0xff) > 0x20) nonBlank = true
+        i += 1
+      }
+      next = i
+    }
+    passed
   }
+
+  private def fill(keep: Boolean): Boolean = {
+    if (keep) {
+      val held = filled - lineStart
+      if (held == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+      else if (lineStart > 0) System.arraycopy(buf, lineStart, buf, 0, held)
+      base += lineStart
+      filled = held
+    } else {
+      base += filled
+      filled = 0
+    }
+    next = filled
+    lineStart = 0
+    val n = in.read(buf, filled, buf.length - filled)
+    if (n <= 0) false
+    else { filled += n; true }
+  }
+
   def close(): Unit = in.close()
+}
+
+private[v2] object TerminatedLineReader {
+  val BlockBytes: Int = 64 * 1024
 }
 
 /** [startLine, endLine) of one shard's record positions; the batch path

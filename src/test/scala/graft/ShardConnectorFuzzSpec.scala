@@ -26,7 +26,9 @@ import graft.sources.v2._
   *   - batch REPLAYS (re-plan + re-read the same [start, end) range —
   *     Spark's failure-recovery path — must yield identical rows), and
   *   - driver RESTARTS (new stream + new client resumed from the
-  *     serialized offset checkpoint, in-memory high-water marks gone),
+  *     serialized offset checkpoint, in-memory high-water marks gone;
+  *     about half also drop the JVM's seek marks, so the next batches
+  *     byte-skip from 0 as a cold executor does),
   * with a per-shard model checked at every trigger:
   *   1. offsets never regress and never skip — each planned partition
   *      reads exactly [committed, latest) of its shard;
@@ -49,7 +51,7 @@ class ShardConnectorFuzzSpec extends AnyFunSuite {
                                   tearLastAt: Option[Int]) extends Op
   private final case class Noise(shard: Int) extends Op
   private final case class Trigger(replay: Boolean) extends Op
-  private case object Restart extends Op
+  private final case class Restart(cold: Boolean) extends Op
 
   private val genGood: Gen[Entry] = for {
     pk <- Gen.alphaNumStr.map(s => "pk" + s.take(6))
@@ -72,7 +74,7 @@ class ShardConnectorFuzzSpec extends AnyFunSuite {
     } yield Append(shard, recs, tear)),
     2 -> Gen.chooseNum(0, 3).map(Noise),
     5 -> Gen.oneOf(true, false).map(Trigger(_)),
-    2 -> Gen.const(Restart))
+    2 -> Gen.oneOf(true, false).map(Restart(_)))
 
   // every scenario ends with a flush-tears + final trigger (added in run)
   private val genScenario: Gen[List[Op]] =
@@ -223,7 +225,8 @@ class ShardConnectorFuzzSpec extends AnyFunSuite {
           completeTear(i)
           write(shardFile(i), "   \n\n")
         case Trigger(replay) => doTrigger(replay)
-        case Restart =>
+        case Restart(cold) =>
+          if (cold) ShardScan.dropSeekMarks()
           client = newClient()
           stream = new ShardMicroBatchStream(client, opts, allFields, dir.getAbsolutePath)
       }
@@ -260,9 +263,11 @@ class ShardConnectorFuzzSpec extends AnyFunSuite {
       Append(0, List(Good("b", "?", 20L, "p2"), Corrupt("42")), Some(3)),
       Trigger(replay = false), // torn tail invisible
       Noise(0),                // completes the tear
-      Restart,
+      Restart(cold = true),    // no seek marks: the batch byte-skips from 0
       Trigger(replay = true),  // post-restart delta: exactly the completed record
       Append(1, List(Corrupt("[1,2,3]"), Good("c", "?", 30L, "p3")), None), // late shard
+      Restart(cold = false),   // marks kept: the batch seeks to its start
+      Append(0, List(Good("d", "?", 40L, "p4")), None),
       Trigger(replay = false))
     run(ops)
   }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.storage.StorageLevel
 
 import graft.config.{AppConfig, Arn, CounterDef}
-import graft.operators.{Counters, JqTransform, Overlap}
+import graft.operators.{Counters, JqTransform}
 import graft.sinks.Sinks
 
 /** The engine facade — what the reference's `App.handler` does per event
@@ -23,14 +23,14 @@ import graft.sinks.Sinks
   * The reference runs counters as goroutines over the same decoded batch
   * (an errgroup, `counter.go:172-198`). [[run]] does the same: it submits
   * each counter's sink job from its own driver thread
-  * ([[graft.operators.Overlap.all]]: fail-fast, siblings cancelled). When
+  * ([[graft.sinks.Sinks.writeAll]]: fail-fast, siblings cancelled). When
   * two or more counters route to a batch input that the caller has not
   * persisted and that does more than read parquet files, it also persists
   * the input on disk so the scan, KPL deaggregation and JSON parse run
   * once per call, and unpersists before returning. Nothing is cached
-  * across calls. Counters sharing a window width can instead share one
-  * shuffle too via [[Counters.fanOut]], an opt-in API that `run` does not
-  * use.
+  * across calls. Counters sharing a window width could also share one
+  * shuffle via [[Counters.fanOut]], which `run` does not use; the
+  * streaming engine does (`graft.streaming.StreamingEngine.run`).
   */
 object Engine {
 
@@ -90,14 +90,8 @@ object Engine {
     val shared = routed >= 2 && !df.isStreaming && df.storageLevel == StorageLevel.NONE &&
       !readsParquetFiles(df.queryExecution.analyzed)
     if (shared) df.persist(StorageLevel.DISK_ONLY)
-    try {
-      val (toStdout, toPutter) = process(df, tsCol, config, eventSource, shardCol)
-        .partition { case (c, _) => Sinks.writesToStdout(c, putter) }
-      val stdoutJob = Option.when(toStdout.nonEmpty)(() =>
-        toStdout.foreach { case (c, out) => Sinks.write(out, c, putter) })
-      Overlap.all(stdoutJob.toSeq ++ toPutter.map { case (c, out) =>
-        () => Sinks.write(out, c, putter) })
-    } finally if (shared) df.unpersist()
+    try Sinks.writeAll(process(df, tsCol, config, eventSource, shardCol), putter)
+    finally if (shared) df.unpersist()
   }
 
   /** Whether `plan` only reads parquet files through projections, filters

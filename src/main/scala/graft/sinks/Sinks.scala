@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.config.{Arn, CounterDef}
+import graft.operators.Overlap
 
 /** Output record sinks (reference O15, `/root/reference/counter.go:514-555`):
   * final counter rows are serialized to JSON and put to the counter's
@@ -17,8 +18,9 @@ import graft.config.{Arn, CounterDef}
   * SDK dependency: a deployment provides kinesis/firehose putters; tests use
   * [[CollectingPutter]]; the CLI uses [[StdoutPutter]]. Batch writes drain
   * per-partition on the executors (`foreachPartition` — rows never collect
-  * to the driver); for streams wire [[foreachBatchSink]] into
-  * `writeStream.foreachBatch`.
+  * to the driver). [[writeAll]] is the one sink step of the batch
+  * `graft.Engine.run` and of every `graft.streaming.StreamingEngine`
+  * micro-batch.
   */
 object Sinks {
 
@@ -152,12 +154,19 @@ object Sinks {
   /** Whether [[write]] sends `c`'s records to stdout: no kinesis/firehose
     * output ARN, or the putter is [[StdoutPutter]] itself.
     */
-  private[graft] def writesToStdout(c: CounterDef, putter: RecordPutter): Boolean =
+  private def writesToStdout(c: CounterDef, putter: RecordPutter): Boolean =
     serviceTarget(c).isEmpty || (putter eq StdoutPutter)
 
-  /** `writeStream.foreachBatch(foreachBatchSink(c, putter))` — the streaming
-    * sink wiring (SURVEY.md O15 ↔ Structured Streaming).
+  /** Sink every (counter, output) pair: [[write]] jobs run concurrently,
+    * each from its own driver thread ([[Overlap.all]]: fail-fast, siblings
+    * cancelled), except that counters whose records go to stdout drain one
+    * after another in the order given, so their lines never interleave.
     */
-  def foreachBatchSink(c: CounterDef, putter: RecordPutter): (DataFrame, Long) => Unit =
-    (batch, _) => write(batch, c, putter)
+  def writeAll(outs: Seq[(CounterDef, DataFrame)], putter: RecordPutter): Unit = {
+    val (toStdout, toPutter) = outs.partition { case (c, _) => writesToStdout(c, putter) }
+    val stdoutJob = Option.when(toStdout.nonEmpty)(() =>
+      toStdout.foreach { case (c, out) => write(out, c, putter) })
+    Overlap.all(stdoutJob.toSeq ++ toPutter.map { case (c, out) =>
+      () => write(out, c, putter) })
+  }
 }

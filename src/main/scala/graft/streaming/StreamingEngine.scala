@@ -1,10 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.StreamingQuery
+import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
-import graft.config.{AppConfig, Arn}
+import graft.config.{AppConfig, Arn, CounterDef}
+import graft.operators.JqTransform
 import graft.sinks.Sinks
 
 /** The composed STREAMING application — the reference's whole Lambda
@@ -16,23 +21,39 @@ import graft.sinks.Sinks
   *   → KPL deaggregate (O3)          StreamingCounters.parsePackedRecords
   *   → JSON parse + corrupt channel (O4)
   *   → ARN-route each configured counter (O16)
-  *   → tumbling window + count/ACD (O8/O9/O12), jq transform (O14)
-  *   → one writeStream per counter → RecordPutter sink (O15)
+  *   → per window width: ONE query  StreamingCounters.fanOut
+  *       tumbling window + watermark, every counter's count/ACD
+  *       (O8/O9/O12) as one aggregation over one state store
+  *   → foreachBatch: per counter, its rows → jq transform (O14)
+  *       → Sinks.writeAll → RecordPutter sink (O15)
   *   [+ the corrupt-record stream → its own sink: batchItemFailures]
   * }}}
   *
-  * One streaming query per matching counter (separate queries because each
-  * counter has its own output schema after jq and its own sink ARN;
-  * counters sharing a window width can instead share state via
-  * [[StreamingCounters.fanOut]] when their output shapes align). The
-  * returned queries are RUNNING; the caller owns their lifecycle
-  * (`awaitTermination`/`stop`).
+  * The routed counters that share a `window_duration` run as one streaming
+  * query, as the reference runs all of a stream's counters over one
+  * decoded batch (`counter.go:161-204`): one source read, one parse, one
+  * watermark, one aggregation, one offset log. Each micro-batch's emitted
+  * rows (at most counters × closing windows) are persisted once; a batch
+  * that closes no window puts nothing. Otherwise every counter's rows get
+  * its own `jq_expr` and go to its own sink through the same step the
+  * batch engine uses ([[Sinks.writeAll]]). Like the reference's errgroup
+  * (`counter.go:172-198`), a failing sink or jq transform stops the whole
+  * query, so the counters of one width fail together.
+  *
+  * Every query's plan is built before any query starts, so a counter that
+  * cannot plan (a `value_quantile` or `heavy_hitters` counter has no
+  * single aggregate Column) leaves nothing running. The returned queries
+  * are RUNNING; the caller owns their lifecycle (`awaitTermination`/
+  * `stop`).
   */
 object StreamingEngine {
 
   /** Route + launch every matching counter over a raw payload stream.
-    * Returns (counterId → running query), plus the failures query under
-    * key `"__failures__"` when `failurePutter` is set.
+    * Returns (counterId → running query), the ids of one window width
+    * mapping to the same query, named `"<queryNamePrefix>-<ids joined by
+    * '-'>"`; plus the failures query under key `"__failures__"` when
+    * `failurePutter` is set. If a query fails to start, the ones already
+    * started are stopped before the error is rethrown.
     */
   def run(raw: DataFrame, schema: StructType, tsCol: String, config: AppConfig,
           eventSource: Arn, putter: Sinks.RecordPutter,
@@ -42,31 +63,70 @@ object StreamingEngine {
           queryNamePrefix: String = "graft"): Map[String, StreamingQuery] = {
     val parsed = StreamingCounters.parsePackedRecords(raw, schema, payloadCol)
     val ok = StreamingCounters.parsedOk(parsed)
-    val counterQueries = config.counters
-      .filter(_.matchesSource(eventSource, config.arnMatchCompat))
-      .map { c =>
-        val out = StreamingCounters.pipeline(
-          ok, tsCol, c, watermarkDelay, Some(eventSource.toString))
-        c.id -> out.writeStream
-          .queryName(s"$queryNamePrefix-${c.id}")
-          .outputMode("append")
-          .foreachBatch(Sinks.foreachBatchSink(c, putter))
-          .start()
-      }
+    val routed = config.counters.filter(_.matchesSource(eventSource, config.arnMatchCompat))
+    val groups = routed.map(_.windowDuration).distinct.map { w =>
+      val cs = routed.filter(_.windowDuration == w)
+      val fanned = StreamingCounters.fanOut(ok, tsCol, cs, watermarkDelay,
+        Some(eventSource.toString))
+      val transforms = cs.map(c => c -> c.jqExpr.map(JqTransform.compile))
+      // a jq program that does not fit the counter's rows fails here, not
+      // in the first batch that closes a window
+      transforms.foreach { case (c, jq) => counterRows(fanned, c, jq) }
+      cs -> fanned.writeStream
+        .queryName(s"$queryNamePrefix-${cs.map(_.id).mkString("-")}")
+        .outputMode("append")
+        .foreachBatch((batch: DataFrame, _: Long) => sinkBatch(batch, transforms, putter))
+    }
     // the batchItemFailures analog (counter.go:245-248): corrupt payloads
     // flow to their own sink instead of failing the stream
-    val failureQuery = failurePutter.map { fp =>
-      "__failures__" -> StreamingCounters.failures(parsed).writeStream
+    val failureWriter = failurePutter.map { fp =>
+      StreamingCounters.failures(parsed).writeStream
         .queryName(s"$queryNamePrefix-failures")
         .outputMode("append")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           // executor-side drain, like Sinks.write — never collect
-          batch.foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
+          batch.foreachPartition { it: Iterator[Row] =>
             it.foreach(r => fp.put(null, "failures", r.getString(0)))
           }
         }
-        .start()
     }
-    (counterQueries ++ failureQuery).toMap
+    val started = ArrayBuffer.empty[StreamingQuery]
+    def start(w: DataStreamWriter[Row]): StreamingQuery = { val q = w.start(); started += q; q }
+    try {
+      val counterQueries = groups.flatMap { case (cs, w) =>
+        val q = start(w)
+        cs.map(_.id -> q)
+      }
+      (counterQueries ++ failureWriter.map(w => "__failures__" -> start(w))).toMap
+    } catch {
+      case NonFatal(e) =>
+        started.foreach(q => try q.stop() catch { case NonFatal(s) => e.addSuppressed(s) })
+        throw e
+    }
+  }
+
+  /** `c`'s rows of a fan-out frame with its jq transform applied. Counter
+    * id and type become literals again, as in a one-counter frame, so jq
+    * branches on them prune at plan time the same way.
+    */
+  private def counterRows(fanned: DataFrame, c: CounterDef,
+                          jq: Option[DataFrame => DataFrame]): DataFrame = {
+    val rows = fanned.where(col("counter_id") === c.id)
+      .withColumn("counter_id", lit(c.id))
+      .withColumn("counter_type", lit(c.counterType.name))
+    jq.fold(rows)(_(rows))
+  }
+
+  /** One micro-batch of a width's query: materialize the emitted rows once,
+    * then sink each counter's share unless no window closed.
+    */
+  private def sinkBatch(batch: DataFrame,
+                        transforms: Seq[(CounterDef, Option[DataFrame => DataFrame])],
+                        putter: Sinks.RecordPutter): Unit = {
+    batch.persist()
+    try {
+      if (batch.count() > 0)
+        Sinks.writeAll(transforms.map { case (c, jq) => c -> counterRows(batch, c, jq) }, putter)
+    } finally batch.unpersist()
   }
 }

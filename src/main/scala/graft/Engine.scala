@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, window}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project,
   RepartitionOperation, SubqueryAlias}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -21,16 +22,14 @@ import graft.sinks.Sinks
   * sink (O15).
   *
   * The reference runs counters as goroutines over the same decoded batch
-  * (an errgroup, `counter.go:172-198`). [[run]] does the same: it submits
-  * each counter's sink job from its own driver thread
-  * ([[graft.sinks.Sinks.writeAll]]: fail-fast, siblings cancelled). When
-  * two or more counters route to a batch input that the caller has not
-  * persisted and that does more than read parquet files, it also persists
-  * the input on disk so the scan, KPL deaggregation and JSON parse run
-  * once per call, and unpersists before returning. Nothing is cached
-  * across calls. Counters sharing a window width could also share one
-  * shuffle via [[Counters.fanOut]], which `run` does not use; the
-  * streaming engine does (`graft.streaming.StreamingEngine.run`).
+  * (an errgroup, `counter.go:172-198`). [[run]] does the same: the
+  * counters that share a window width run as one aggregation, as the
+  * streaming engine's one query per width does
+  * (`graft.streaming.StreamingEngine.run`), and each counter's sink job
+  * is submitted from its own driver thread
+  * ([[graft.sinks.Sinks.writeAll]]: fail-fast, siblings cancelled). What
+  * `run` persists, on disk, it unpersists before returning; nothing is
+  * cached across calls.
   */
 object Engine {
 
@@ -51,11 +50,11 @@ object Engine {
       case (None, Some(shard)) => Counters.runPerShard(df, tsCol, shard, c, eventSourceArn)
       case _ => Counters.run(df, tsCol, c, eventSourceArn)
     }
-    c.jqExpr match {
-      case Some(jq) => JqTransform(base, jq)
-      case None => base
-    }
+    withJq(base, c)
   }
+
+  private def withJq(rows: DataFrame, c: CounterDef): DataFrame =
+    c.jqExpr.fold(rows)(JqTransform(rows, _))
 
   /** Route + run all counters of `config` against one batch.
     * Returns (counter, output) for every counter matching `eventSource`.
@@ -70,29 +69,86 @@ object Engine {
       .map(c => c -> pipeline(df, tsCol, c, shardCol, Some(eventSource.toString)))
 
   /** [[process]] + sink each output (O15): the batch-mode equivalent of the
-    * reference's handler → putStateRecord chain. Sink jobs run
-    * concurrently; counters whose records go to stdout drain one after
-    * another in config order, so their lines never interleave.
+    * reference's handler → putStateRecord chain, with the same records.
+    * Sink jobs run concurrently; counters whose records go to stdout drain
+    * one after another in config order, so their lines never interleave.
     *
-    * With two or more routed counters, an input that is not yet persisted
-    * is read once for all of them, unless it only reads parquet files
-    * ([[readsParquetFiles]]): there each counter's own read prunes to its
-    * columns and takes its filters, where a cache would hold every column.
-    * The shared copy is kept on disk only: cached blocks in memory would
-    * take storage memory that execution cannot evict, and the counters'
-    * aggregations over an input larger than memory then fail where
-    * re-reading the input per counter succeeds.
+    * The routed counters of [[Counters.fansOut]] types that share a window
+    * width run as ONE aggregation ([[widthAggregate]]), persisted on disk
+    * and read by each of their sink jobs; the others run their own
+    * [[pipeline]]. The input is persisted on disk too when two or more of
+    * these plans read it, it is not yet persisted, and it does more than
+    * read parquet files ([[readsParquetFiles]]: there each plan's own read
+    * prunes to its columns and takes its filters, where a cache would hold
+    * every column). Nothing is kept in memory: cached blocks there would
+    * take storage memory that execution cannot evict, and aggregations
+    * over an input larger than memory then fail where re-reading the input
+    * succeeds. Everything persisted is unpersisted before `run` returns.
     */
   def run(df: DataFrame, tsCol: String, config: AppConfig, eventSource: Arn,
           putter: Sinks.RecordPutter,
           shardCol: Option[String] = None): Unit = {
-    val routed = config.counters.count(_.matchesSource(eventSource, config.arnMatchCompat))
-    val shared = routed >= 2 && !df.isStreaming && df.storageLevel == StorageLevel.NONE &&
+    val arn = Some(eventSource.toString)
+    val routed = config.counters.filter(_.matchesSource(eventSource, config.arnMatchCompat))
+    val widths = routed.filter(Counters.fansOut).groupBy(_.windowDuration)
+    val aggregates = widths.map { case (w, cs) => w -> widthAggregate(df, tsCol, cs, shardCol) }
+    val outs = routed.map { c =>
+      val w = c.windowDuration
+      c -> (if (Counters.fansOut(c))
+        withJq(counterRows(aggregates(w), widths(w).indexOf(c), c, shardCol.isDefined, arn), c)
+      else pipeline(df, tsCol, c, shardCol, arn))
+    }
+    val plans = widths.size + routed.count(!Counters.fansOut(_))
+    val sharedInput = plans >= 2 && df.storageLevel == StorageLevel.NONE &&
       !readsParquetFiles(df.queryExecution.analyzed)
-    if (shared) df.persist(StorageLevel.DISK_ONLY)
-    try Sinks.writeAll(process(df, tsCol, config, eventSource, shardCol), putter)
-    finally if (shared) df.unpersist()
+    // the input first: an aggregate persisted after it plans its read from
+    // the input's copy
+    if (sharedInput) df.persist(StorageLevel.DISK_ONLY)
+    aggregates.values.foreach(_.persist(StorageLevel.DISK_ONLY))
+    try Sinks.writeAll(outs, putter)
+    finally {
+      // the aggregates first: unpersisting the input re-plans what still
+      // caches a plan over it
+      aggregates.values.foreach(_.unpersist())
+      if (sharedInput) df.unpersist()
+    }
   }
+
+  /** One window width's counters as ONE aggregation grouped by window (and
+    * `shard_id`, the shard column as a string, when the input is sharded),
+    * with column `__agg_<i>` for the width's i-th counter: its partial
+    * state ([[Counters.partialAgg]]) for a two-phase counter over a sharded
+    * input, its finished value ([[Counters.aggExpr]]) otherwise. Its rows
+    * grow with windows × shards, not with input rows.
+    */
+  private def widthAggregate(df: DataFrame, tsCol: String, cs: Seq[CounterDef],
+                             shardCol: Option[String]): DataFrame = {
+    val aggs = cs.zipWithIndex.map { case (c, i) =>
+      val agg = if (twoPhase(c, shardCol.isDefined)) Counters.partialAgg(df, c)
+                else Counters.aggExpr(df, c)
+      agg.as(s"__agg_$i")
+    }
+    val keys = window(col(tsCol), cs.head.windowDuration) +:
+      shardCol.map(s => col(s).cast("string").as("shard_id")).toSeq
+    df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Counter `c`'s rows of its width's aggregate, column `__agg_<i>`, as
+    * [[pipeline]] emits them before jq: a two-phase counter's partials
+    * merge across shards ([[Counters.mergePartials]]); a per-shard
+    * counter keeps `shard_id`.
+    */
+  private def counterRows(agg: DataFrame, i: Int, c: CounterDef, sharded: Boolean,
+                          arn: Option[String]): DataFrame = {
+    val v = col(s"__agg_$i")
+    if (twoPhase(c, sharded))
+      Counters.finalizeOutput(
+        Counters.mergePartials(agg.withColumn(Counters.partialColumn(c), v), c), c, arn)
+    else Counters.finalizeOutput(agg.withColumn("value", v), c, arn, includeShard = sharded)
+  }
+
+  private def twoPhase(c: CounterDef, sharded: Boolean): Boolean =
+    sharded && c.aggregateStreamArn.isDefined
 
   /** Whether `plan` only reads parquet files through projections, filters
     * and repartitions: Catalyst then prunes each consumer's read to the

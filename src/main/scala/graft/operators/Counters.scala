@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window => SqlWindow}
 import org.apache.spark.sql.functions._
@@ -133,21 +135,38 @@ object Counters {
     else max(centsOf(value))
   }
 
+  /** The partial-state column of every counter type that has one aggregate
+    * Column: the types a fan-out aggregation carries ([[fanOut]],
+    * `graft.Engine.run`, `StreamingCounters.fanOut`). `value_quantile` and
+    * `heavy_hitters` pick or rank per window and have their own shapes.
+    */
+  private val PartialColumn: ListMap[CounterType, String] = ListMap(
+    CounterType.Count -> "partial_count",
+    CounterType.ApproxCountDistinct -> "partial_sketch",
+    CounterType.ValueSum -> "partial_sum",
+    CounterType.ValueMin -> "partial_extreme",
+    CounterType.ValueMax -> "partial_extreme")
+
+  /** Whether `c` has one aggregate Column ([[aggExpr]], [[partialAgg]]),
+    * so that it can share a groupBy with other counters.
+    */
+  def fansOut(c: CounterDef): Boolean = PartialColumn.contains(c.counterType)
+
+  /** The name [[partialState]] gives `c`'s partial column, which
+    * [[mergePartials]] reads.
+    */
+  private[graft] def partialColumn(c: CounterDef): String = PartialColumn(c.counterType)
+
   /** The per-counter aggregate expression, usable standalone or fanned out
     * (several counters in ONE groupBy pass — see [[fanOut]]).
     * Conditional form: rows not qualifying contribute NULL, which both
     * `count` and `approx_count_distinct` ignore — this is what lets N
     * differently-filtered counters share a single shuffle.
     */
-  def aggExpr(df: DataFrame, c: CounterDef): Column = {
-    val v = valueColumn(c)
+  def aggExpr(df: DataFrame, c: CounterDef): Column =
     c.counterType match {
       case CounterType.Count => countAgg(df, c)
-      case CounterType.ApproxCountDistinct =>
-        val value = v.getOrElse(
-          throw new IllegalArgumentException(
-            s"counter ${c.id}: approx_count_distinct requires a target"))
-        acdAgg(df, value, c.siphashKeyHex)
+      case CounterType.ApproxCountDistinct => acdAgg(df, acdValue(c), c.siphashKeyHex)
       case CounterType.ValueSum => sumAgg(df, c)
       case CounterType.ValueMin | CounterType.ValueMax => extremeAgg(df, c)
       case CounterType.ValueQuantile | CounterType.HeavyHitters =>
@@ -156,9 +175,23 @@ object Counters {
         throw new IllegalArgumentException(
           s"counter ${c.id}: ${c.counterType.name} has no single-Column " +
             "aggregate — use Counters.run/runPerShard/runTwoPhase " +
-            "(sliding/session/fanOut topologies support count/ACD only)")
+            "(sliding/session/fanOut topologies support " +
+            PartialColumn.keys.map(_.name).mkString("/") + " only)")
     }
-  }
+
+  /** `c`'s per-(window, shard) partial state as one aggregate Column: the
+    * IntermediateRecord's state (`counter.go:483-491`), merged by
+    * [[mergePartials]]. An ACD counter's partial is its HLL sketch; the
+    * other types' partials are their own aggregates (a count, a cents sum,
+    * an extreme), which merge by sum, min or max.
+    */
+  private[graft] def partialAgg(df: DataFrame, c: CounterDef): Column =
+    if (c.counterType == CounterType.ApproxCountDistinct)
+      hll_sketch_agg(sketchInput(df, acdValue(c), c.siphashKeyHex), lit(16))
+    else aggExpr(df, c)
+
+  private def acdValue(c: CounterDef): Column = valueColumn(c).getOrElse(
+    throw new IllegalArgumentException(s"counter ${c.id}: approx_count_distinct requires a target"))
 
   /** The ACD aggregate: DataSketches HLL at lgConfigK=16 — the reference's
     * precision (`counter.go:206-208`) — via `hll_sketch_agg`, which runs in
@@ -338,22 +371,11 @@ object Counters {
   }
 
   /** Phase 1: per-(window, shard) partial state — the IntermediateRecord
-    * (`counter.go:483-491`). Count → partial row count; ACD → HLL sketch
-    * bytes (mergeable, bounded size).
+    * (`counter.go:483-491`): [[partialAgg]] in [[partialColumn]], e.g. a
+    * partial row count or HLL sketch bytes (mergeable, bounded size).
     */
-  def partialState(df: DataFrame, tsCol: String, shardCol: String, c: CounterDef): DataFrame = {
-    val grouped = windowed(df, tsCol, c, Seq(col(shardCol).as("shard_id")))
+  def partialState(df: DataFrame, tsCol: String, shardCol: String, c: CounterDef): DataFrame =
     c.counterType match {
-      case CounterType.Count =>
-        grouped.agg(countAgg(df, c).as("partial_count"))
-      case CounterType.ApproxCountDistinct =>
-        val value = valueColumn(c).get
-        grouped.agg(hll_sketch_agg(sketchInput(df, value, c.siphashKeyHex), lit(16))
-          .as("partial_sketch"))
-      case CounterType.ValueSum =>
-        grouped.agg(sumAgg(df, c).as("partial_sum"))
-      case CounterType.ValueMin | CounterType.ValueMax =>
-        grouped.agg(extremeAgg(df, c).as("partial_extreme"))
       // extension types: the partial is a per-(window, shard) table —
       // a (value, cnt) histogram / a (member, cnt) count table — both
       // mergeable by concat + re-sum, like the reference's counter states
@@ -377,8 +399,10 @@ object Counters {
           .groupBy(col("window"), col("shard_id"))
           .agg(sort_array(collect_list(struct(col("member").as("m"), col("__cnt").as("n"))))
             .as("partial_counts"))
+      case _ =>
+        windowed(df, tsCol, c, Seq(col(shardCol).as("shard_id")))
+          .agg(partialAgg(df, c).as(partialColumn(c)))
     }
-  }
 
   /** Phase 2: merge partials across shards (`counter.go:372-403`):
     * count → sum of partial counts; ACD → HLL union + estimate;
@@ -497,14 +521,9 @@ object Counters {
     require(counters.nonEmpty, "fanOut requires at least one counter")
     // the conditional-aggregate trick needs one agg Column per counter;
     // quantile/rank counters have their own shapes — run them via `run`
-    require(counters.forall(c => c.counterType == CounterType.Count ||
-      c.counterType == CounterType.ApproxCountDistinct ||
-      c.counterType == CounterType.ValueSum ||
-      c.counterType == CounterType.ValueMin ||
-      c.counterType == CounterType.ValueMax),
-      "fanOut supports count/approx_count_distinct/value_sum/value_min/" +
-        "value_max counters only; run value_quantile/heavy_hitters " +
-        "counters individually")
+    require(counters.forall(fansOut),
+      "fanOut supports " + PartialColumn.keys.map(_.name).mkString("/") +
+        " counters only; run value_quantile/heavy_hitters counters individually")
     val byWindow = counters.groupBy(_.windowDuration).toSeq.sortBy(_._1)
     byWindow.map { case (w, cs) =>
       unpivotCounters(

@@ -54,10 +54,12 @@ private[graft] object Overlap {
       .map(_.sparkContext)
     // tags every job the thunks start, so a failure can cancel them
     val tag = s"graft-overlap-${UUID.randomUUID()}"
-    // sweeps are 2–4 chains, Engine.run one job per counter; FIFO
-    // scheduling gives the earlier chain priority and later chains
-    // back-fill its tail. More concurrent jobs than cores only queue
-    // tasks, but two still overlap driver latency on a single core.
+    // sweeps are 2–4 chains; Sinks.writeAll one sink job per counter,
+    // whose jobs in Engine.run share their width's aggregate stage (the
+    // scheduler runs a stage two jobs need once). FIFO scheduling gives
+    // the earlier chain priority and later chains back-fill its tail.
+    // More concurrent jobs than cores only queue tasks, but two still
+    // overlap driver latency on a single core.
     val slots = sc.fold(Runtime.getRuntime.availableProcessors)(_.defaultParallelism)
     val pool = Executors.newFixedThreadPool(thunks.size min (slots max 2))
     val done = new ExecutorCompletionService[T](pool)

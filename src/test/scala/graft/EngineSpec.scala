@@ -3,17 +3,19 @@ package graft
 import java.io.ByteArrayOutputStream
 import java.nio.file.Files
 import java.sql.Timestamp
-import java.util.concurrent.ExecutionException
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.concurrent.Eventually
 import org.scalatest.time.{Seconds, Span}
 
-import graft.config.{Arn, ConfigLoader}
+import graft.config.{AppConfig, Arn, ConfigLoader, CounterType}
 import graft.operators.{Counters, Intermediate}
 import graft.sinks.Sinks
 import graft.sources.Deaggregate
@@ -84,6 +86,7 @@ class EngineSpec extends SparkTestBase with Eventually {
   }
 
   private val out = "arn:aws:kinesis:ap-northeast-1:111122223333:stream/out"
+  private val agg = "arn:aws:kinesis:ap-northeast-1:111122223333:stream/agg"
 
   // count, ACD with jq, and a two-phase count over the shard column
   private val threeCounters =
@@ -144,33 +147,132 @@ class EngineSpec extends SparkTestBase with Eventually {
     } finally input.unpersist(blocking = true)
   }
 
-  test("run reads a plain parquet input per counter and caches an input that does per-row work on disk") {
-    val cfg = ConfigLoader.fromYaml(threeCounters).fold(e => fail(e), identity)
+  // every fan-out type in every topology, jq, heavy_hitters (its own
+  // pipeline) and a second window width
+  private val everyTopology =
+    s"""counters:
+      |  - id: clicks
+      |    input_stream_arn: "arn:aws:kinesis:*:*:stream/in*"
+      |    output_stream_arn: "$out"
+      |    target_expr: 'action == "click"'
+      |    window_duration: 1 minute
+      |    jq_expr: '{"w": .window_start, "n": .value, "s": .shard_id}'
+      |  - id: users
+      |    input_stream_arn: "arn:aws:kinesis:*:*:stream/in*"
+      |    output_stream_arn: "$out"
+      |    counter_type: approx_count_distinct
+      |    target_column: user_id
+      |    window_duration: 1 minute
+      |  - id: total_2p
+      |    input_stream_arn: "arn:aws:kinesis:*:*:stream/in*"
+      |    output_stream_arn: "$out"
+      |    aggregate_stream_arn: "$agg"
+      |    target_column: "*"
+      |    window_duration: 1 minute
+      |  - id: users_2p
+      |    input_stream_arn: "arn:aws:kinesis:*:*:stream/in*"
+      |    output_stream_arn: "$out"
+      |    aggregate_stream_arn: "$agg"
+      |    counter_type: approx_count_distinct
+      |    target_column: user_id
+      |    window_duration: 1 minute
+      |  - id: spend
+      |    input_stream_arn: "arn:aws:kinesis:*:*:stream/in*"
+      |    output_stream_arn: "$out"
+      |    counter_type: value_sum
+      |    target_column: amount
+      |    window_duration: 1 minute
+      |  - id: low_2p
+      |    input_stream_arn: "arn:aws:kinesis:*:*:stream/in*"
+      |    output_stream_arn: "$out"
+      |    aggregate_stream_arn: "$agg"
+      |    counter_type: value_min
+      |    target_column: amount
+      |    window_duration: 1 minute
+      |  - id: high
+      |    input_stream_arn: "arn:aws:kinesis:*:*:stream/in*"
+      |    output_stream_arn: "$out"
+      |    counter_type: value_max
+      |    target_column: amount
+      |    window_duration: 1 minute
+      |  - id: top_users
+      |    input_stream_arn: "arn:aws:kinesis:*:*:stream/in*"
+      |    output_stream_arn: "$out"
+      |    counter_type: heavy_hitters
+      |    target_column: user_id
+      |    top_k: 3
+      |    window_duration: 1 minute
+      |  - id: clicks_30s
+      |    input_stream_arn: "arn:aws:kinesis:*:*:stream/in*"
+      |    output_stream_arn: "$out"
+      |    target_expr: 'action == "click"'
+      |    window_duration: 30 seconds
+      |  - id: total_30s_2p
+      |    input_stream_arn: "arn:aws:kinesis:*:*:stream/in*"
+      |    output_stream_arn: "$out"
+      |    aggregate_stream_arn: "$agg"
+      |    target_column: "*"
+      |    window_duration: 30 seconds
+      |""".stripMargin
+
+  test("run puts what process then write put per counter, sharded and unsharded") {
+    val cfg = ConfigLoader.fromYaml(everyTopology).fold(e => fail(e), identity)
+    // 3 minutes; the shard an Int column; an amount that is sometimes null
+    val input = (0 until n).map { i =>
+      (new Timestamp(base + i * 150L), i.toLong % 50, i % 4, if (i % 3 == 0) "click" else "view",
+        Option.when(i % 7 != 0)((i % 97) * 1.25))
+    }.toDF("ts", "user_id", "shard", "action", "amount")
+    for (shardCol <- Seq(Some("shard"), None)) {
+      Sinks.CollectingPutter.drain()
+      Engine.run(input, "ts", cfg, source, new Sinks.CollectingPutter, shardCol)
+      val fanned = Sinks.CollectingPutter.drain()
+      Engine.process(input, "ts", cfg, source, shardCol)
+        .foreach { case (c, o) => Sinks.write(o, c, new Sinks.CollectingPutter) }
+      val perCounter = Sinks.CollectingPutter.drain()
+      assert(fanned.map(_._2).toSet == cfg.counters.map(_.id).toSet)
+      // clicks: per shard and window when sharded; once per window if not
+      assert(fanned.count(_._2 == "clicks") == (if (shardCol.isDefined) 12 else 3))
+      assert(fanned.count(_._2 == "total_30s_2p") == 6)
+      assert(fanned.sorted == perCounter.sorted, s"shard column $shardCol")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("run caches its input on disk only when two or more plans read it") {
+    val oneWidth = ConfigLoader.fromYaml(threeCounters).fold(e => fail(e), identity)
+    val every = ConfigLoader.fromYaml(everyTopology).fold(e => fail(e), identity)
+    val twoWidths = every.copy(counters = every.counters.filter(_.counterType != CounterType.HeavyHitters))
+    val widthAndHitters = every.copy(counters = every.counters.filter(_.windowDuration == "1 minute"))
     val dir = Files.createTempDirectory("engine-run-parquet").resolve("events").toString
-    events.select($"ts", $"user_id", $"shard").write.parquet(dir)
+    events.select($"ts", $"user_id", $"shard",
+      when($"user_id" % 3 === 0, "click").otherwise("view").as("action"),
+      ($"user_id" * 0.5).as("amount")).write.parquet(dir)
     val parquet = spark.read.parquet(dir)
     // the CLI's loader: parquet scan, ts normalization and spread repartition
     assert(Engine.readsParquetFiles(Tables.events(spark, sf0001).queryExecution.analyzed))
     assert(Engine.readsParquetFiles(
       parquet.where($"user_id" > 3).repartition(4, $"shard").queryExecution.analyzed))
-
-    EngineSpec.sawCache.set(false)
-    Engine.run(parquet, "ts", cfg, source, new EngineSpec.CacheProbePutter, Some("shard"))
-    assert(!EngineSpec.sawCache.get, "a plain parquet input was cached")
-
-    val parsed = parquet.as[(Timestamp, Long, Int)].map(identity).toDF("ts", "user_id", "shard")
+    val parsed = parquet.as[(Timestamp, Long, Int, String, Double)].map(identity)
+      .toDF(parquet.columns.toSeq: _*)
     assert(!Engine.readsParquetFiles(parsed.queryExecution.analyzed))
-    // the probe sees every RDD in the context: drop blocks earlier suites
-    // left behind (a localCheckpoint keeps its copy in memory until the RDD
-    // is garbage-collected), so only this run's caching is judged
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    EngineSpec.sawCacheInMemory.set(false)
-    Engine.run(parsed, "ts", cfg, source, new EngineSpec.CacheProbePutter, Some("shard"))
-    assert(EngineSpec.sawCache.get, "an input with a typed map was not cached")
-    // a cache in memory would shrink the memory the counters' aggregations
-    // can take, failing inputs larger than memory that re-reading counts
-    assert(!EngineSpec.sawCacheInMemory.get, "the shared input was cached in memory")
-    assert(spark.sharedState.cacheManager.isEmpty)
+
+    /** The storage levels `input` had while `run` put its records. */
+    def levelsDuringRun(input: DataFrame, cfg: AppConfig): Set[StorageLevel] = {
+      EngineSpec.probed.set(input)
+      EngineSpec.levels.clear()
+      Engine.run(input, "ts", cfg, source, new EngineSpec.InputCacheProbe, Some("shard"))
+      assert(spark.sharedState.cacheManager.isEmpty, "run left something cached")
+      EngineSpec.levels.asScala.toSet
+    }
+    // one width: the width's aggregate is the input's only reader
+    assert(levelsDuringRun(parsed, oneWidth) == Set(StorageLevel.NONE))
+    // two readers: the input's copy is on disk only, since a copy in memory
+    // would shrink the memory the aggregations can take, failing inputs
+    // larger than memory that re-reading counts
+    assert(levelsDuringRun(parsed, twoWidths) == Set(StorageLevel.DISK_ONLY))
+    assert(levelsDuringRun(parsed, widthAndHitters) == Set(StorageLevel.DISK_ONLY))
+    // a plain parquet read is read again by each plan
+    assert(levelsDuringRun(parquet, twoWidths) == Set(StorageLevel.NONE))
   }
 
   test("a failing counter's sink fails run, cancels its siblings and drops the cache") {
@@ -346,17 +448,15 @@ object EngineSpec {
       }
   }
 
-  val sawCache, sawCacheInMemory = new AtomicBoolean
+  val probed = new AtomicReference[DataFrame]
+  val levels = new ConcurrentLinkedQueue[StorageLevel]
 
-  /** Drops every record; notes whether any query was cached while a put
-    * ran, and whether any cached block was held in memory.
+  /** Drops every record; notes the storage level of the `probed` frame
+    * while a put runs.
     */
-  class CacheProbePutter extends Sinks.RecordPutter {
+  class InputCacheProbe extends Sinks.RecordPutter {
     def put(target: Arn, partitionKey: String, data: String): Unit =
-      SparkSession.getDefaultSession.foreach { s =>
-        if (!s.sharedState.cacheManager.isEmpty) sawCache.set(true)
-        if (s.sparkContext.getRDDStorageInfo.exists(_.memSize > 0)) sawCacheInMemory.set(true)
-      }
+      levels.add(probed.get.storageLevel)
   }
 
   private def waitUntil(cond: => Boolean): Unit = {

@@ -526,24 +526,24 @@ object Counters {
         " counters only; run value_quantile/heavy_hitters counters individually")
     val byWindow = counters.groupBy(_.windowDuration).toSeq.sortBy(_._1)
     byWindow.map { case (w, cs) =>
-      unpivotCounters(
-        df.groupBy(window(col(tsCol), w))
-          .agg(aggExpr(df, cs.head).as(s"__agg_${cs.head.id}"),
-            cs.tail.map(c => aggExpr(df, c).as(s"__agg_${c.id}")): _*),
+      val aggs = cs.zipWithIndex.map { case (c, i) => aggExpr(df, c).as(s"__agg_$i") }
+      unpivotCounters(df.groupBy(window(col(tsCol), w)).agg(aggs.head, aggs.tail: _*),
         cs, eventSourceArn)
     }.reduce(_.union(_))
   }
 
-  /** Unpivot one wide aggregated row (window, __agg_c1, …, __agg_cN) into N
-    * output records via a single generator — shared by batch and streaming
-    * fan-out.
+  /** Unpivot one wide aggregated row (window, __agg_0, …, __agg_<N-1>) into
+    * N output records via a single generator — shared by batch and
+    * streaming fan-out. Column `__agg_<i>` holds counter `cs(i)`'s value:
+    * named by position, since a counter id may contain a dot, which `col`
+    * would read as a struct field.
     */
   private[graft] def unpivotCounters(agged: DataFrame, cs: Seq[CounterDef],
                                      eventSourceArn: Option[String]): DataFrame = {
-    val recs = explode(array(cs.map(c => struct(
+    val recs = explode(array(cs.zipWithIndex.map { case (c, i) => struct(
       lit(c.id).as("counter_id"),
       lit(c.counterType.name).as("counter_type"),
-      col(s"__agg_${c.id}").cast("long").as("value"))): _*))
+      col(s"__agg_$i").cast("long").as("value")) }: _*))
     val base = Seq(
       unix_millis(col("window.start")).as("window_start"),
       unix_millis(col("window.end")).as("window_end"),

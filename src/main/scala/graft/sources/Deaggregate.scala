@@ -1,7 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** KPL record deaggregation (reference O3, `/root/reference/deaggregate.go`):
   * the Kinesis Producer Library packs many user records into one Kinesis
@@ -161,34 +168,61 @@ object Deaggregate {
 
   /** The Spark-side operator: explode a binary payload column into one row
     * per deaggregated user record (`partition_key`, `data`), preserving all
-    * other columns. A typed flatMap, not a ScalaUDF — the wire parse is a
-    * partition-local 1→N expansion like the Multimodal ops, so the hot
-    * parse path stays out of UDF-land (and inside the repo's no-ScalaUDF
-    * plan audit). Narrow (no shuffle); a null payload expands to zero
-    * rows; non-KPL payloads pass through as one row with the envelope's
-    * empty partition key, exactly as [[deaggregate]] reports them.
+    * other columns. The explode is a Catalyst generator ([[KplRecords]]) in
+    * a `Generate` that passes the other columns through, not a ScalaUDF or
+    * a typed flatMap: rows stay internal rows, and column pruning reaches
+    * the scan, so a source reads only the columns its consumers use.
+    * Narrow (no shuffle); a null payload expands to zero rows; non-KPL
+    * payloads pass through as one row with the envelope's empty partition
+    * key, exactly as [[deaggregate]] reports them.
+    *
+    * Column order follows `withColumn`: an existing `partition_key` is
+    * replaced in place (always as a string, since the deaggregated key
+    * overwrites whatever was there), otherwise it is appended.
     */
   def explodeRecords(df: DataFrame, payloadCol: String = "data"): DataFrame = {
-    val inSchema = df.schema
-    val payloadIdx = inSchema.fieldIndex(payloadCol)
-    val hadPk = inSchema.fieldNames.contains("partition_key")
-    // mirror withColumn placement AND type: replace in place (always as
-    // string — the deagg key overwrites whatever was there), or append
-    val outSchema = StructType(
-      (if (hadPk) inSchema.fields
-       else inSchema.fields :+ StructField("partition_key", StringType))
-        .map(f => if (f.name == "partition_key") f.copy(dataType = StringType) else f))
-    val pkIdx = outSchema.fieldIndex("partition_key")
-    df.flatMap { row =>
-      val payload = row.getAs[Array[Byte]](payloadIdx)
-      val base = row.toSeq.toArray
-      val template = if (hadPk) base else base :+ (null: Any)
-      deaggregate(payload).map { r =>
-        val vals = template.clone()
-        vals(payloadIdx) = r.data
-        vals(pkIdx) = r.partitionKey
-        Row.fromSeq(vals.toSeq)
-      }
-    }(Encoders.row(outSchema))
+    // bind by attribute, not by name: `col` reads a dot in a name as a field
+    val attrs = df.queryExecution.analyzed.output
+    val payload = attrs(df.schema.fieldIndex(payloadCol))
+    val isPk = (a: Attribute) => a.name == "partition_key"
+    val exploded = df.select(
+      attrs.filterNot(a => (a eq payload) || isPk(a)).map(ColumnBridge.column) :+
+        ColumnBridge.column(KplRecords(payload)).as(Seq(GenKey, GenData)): _*)
+    val out = attrs.map {
+      case a if a eq payload => col(GenData).as(a.name)
+      case a if isPk(a) => col(GenKey).as(a.name)
+      case a => ColumnBridge.column(a)
+    }
+    exploded.select(
+      (if (attrs.exists(isPk)) out else out :+ col(GenKey).as("partition_key")): _*)
   }
+
+  private val GenKey = "__kpl_partition_key"
+  private val GenData = "__kpl_data"
+}
+
+/** Generator `kpl_records(payload)`: one `(partition_key, data)` row per
+  * user record of a Kinesis payload, as [[Deaggregate.deaggregate]] decodes
+  * it (zero rows for a null payload). Neither output is ever null.
+  */
+final case class KplRecords(child: Expression)
+    extends UnaryExpression with Generator with CodegenFallback {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"kpl_records expects BINARY, got ${child.dataType}")
+
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("partition_key", StringType, nullable = false),
+    StructField("data", BinaryType, nullable = false)))
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    Deaggregate.deaggregate(child.eval(input).asInstanceOf[Array[Byte]]).map { r =>
+      InternalRow(UTF8String.fromString(r.partitionKey), r.data)
+    }
+
+  override def prettyName: String = "kpl_records"
+
+  override protected def withNewChildInternal(newChild: Expression): KplRecords =
+    copy(child = newChild)
 }

@@ -298,15 +298,21 @@ object StreamingCounters {
 
   /** O4: parse raw JSON payloads (PERMISSIVE), keeping unparseable records
     * in a `_corrupt` column — the `batchItemFailures` side channel
-    * (`counter.go:245-248`): bad rows are reported, never fatal.
+    * (`counter.go:245-248`): bad rows are reported, never fatal. The
+    * output is `raw`'s columns, then `schema`'s fields, then `_corrupt`.
+    *
+    * `from_json` sits behind a generator (`inline` of a one-element array)
+    * so that each record is parsed once. Expanded through a projection
+    * (`__rec.*`), Catalyst pushes [[parsedOk]]'s `_corrupt` filter below
+    * that projection and substitutes the alias, so the plan evaluates
+    * `from_json` twice per record: once in the filter, once in the
+    * projection. A filter on a generator's output stays above it.
     */
   def parseRecords(raw: DataFrame, schema: StructType, payloadCol: String = "value"): DataFrame = {
     val withCorrupt = schema.add("_corrupt", "string")
-    raw.withColumn("__rec",
-        from_json(col(payloadCol).cast("string"), withCorrupt,
-          Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt")))
-      .select(col("*"), col("__rec.*"))
-      .drop("__rec")
+    raw.select(col("*"), inline(array(
+      from_json(col(payloadCol).cast("string"), withCorrupt,
+        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt")))))
   }
 
   /** O3+O4 composed, the reference's exact ingest order: KPL-deaggregate
@@ -377,7 +383,7 @@ object StreamingCounters {
     require(counters.map(_.windowDuration).distinct.size == 1,
       "streaming fanOut requires a shared window duration")
     val watermarked = stream.withWatermark(tsCol, watermarkDelay)
-    val aggs = counters.map(c => Counters.aggExpr(stream, c).as(s"__agg_${c.id}"))
+    val aggs = counters.zipWithIndex.map { case (c, i) => Counters.aggExpr(stream, c).as(s"__agg_$i") }
     val agged = watermarked
       .groupBy(window(col(tsCol), counters.head.windowDuration))
       .agg(aggs.head, aggs.tail: _*)

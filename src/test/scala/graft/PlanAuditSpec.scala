@@ -1,12 +1,18 @@
 package graft
 
+import java.nio.file.Files
+import java.util.Base64
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 import graft.config.{CounterDef, CounterType}
 import graft.dedup.Dedup
 import graft.operators.Counters
 import graft.similarity.Ann
+import graft.sources.Deaggregate
+import graft.streaming.StreamingCounters
 import graft.textops.TextAnalysis
 
 /** Physical-plan audits: the properties that make these queries survive a
@@ -159,12 +165,41 @@ class PlanAuditSpec extends SparkTestBase {
       s"scan not pruned under the typed transform:\n$p")
   }
 
-  test("KPL deagg explode is a typed flatMap, not a ScalaUDF") {
+  test("KPL deagg explode is a Catalyst generator, not a ScalaUDF") {
     val packed = events.limit(10).select(col("user_id"),
       col("user_id").cast("string").cast("binary").as("data"))
-    val p = plan(graft.sources.Deaggregate.explodeRecords(packed))
+    val p = plan(Deaggregate.explodeRecords(packed))
     assert(!p.contains("ScalaUDF"),
       s"packed-record parse fell back to a Scala UDF:\n$p")
+    assert(p.contains("Generate kpl_records("), s"expected the KPL generator:\n$p")
+  }
+
+  test("packed shard-log ingest parses each record once and reads only (shard_id, data)") {
+    val dir = Files.createTempDirectory("plan-audit-shards")
+    try {
+      val envelope = Deaggregate.aggregate(Seq(1, 2).map(u => Deaggregate.SubRecord(s"k$u",
+        s"""{"ts":"2021-12-01T11:19:0${u}Z","user_id":$u,"action":"click"}""".getBytes("UTF-8"))))
+      val line = s"""{"partitionKey":"agg","sequenceNumber":"1",""" +
+        s""""approximateArrivalTimestamp":0,"data":"${Base64.getEncoder.encodeToString(envelope)}"}"""
+      Files.write(dir.resolve("shard-000.jsonl"), java.util.List.of(line))
+      val schema = StructType(Seq(StructField("ts", TimestampType),
+        StructField("user_id", LongType), StructField("action", StringType)))
+      val raw = spark.read.format("graft-shards").load(dir.toString)
+      val ok = StreamingCounters.parsedOk(StreamingCounters.parsePackedRecords(raw, schema, "data"))
+        .select("ts", "user_id", "action", "shard_id")
+      val p = plan(ok)
+      // a `_corrupt` filter pushed through a `__rec.*` projection evaluates
+      // the parse twice, and the row-count accumulator cannot see it
+      assert("from_json\\(".r.findAllIn(p).size == 1, s"expected one JSON parse:\n$p")
+      assert(!p.contains("DeserializeToObject") && !p.contains("MapPartitions"),
+        s"the explode must not round-trip rows through objects:\n$p")
+      assert(p.contains("ReadSchema: struct<shard_id:string,data:binary>"),
+        s"scan not pruned to the columns the counters read:\n$p")
+      assert(ok.count() == 2)
+    } finally {
+      dir.toFile.listFiles().foreach(_.delete())
+      Files.delete(dir)
+    }
   }
 
   test("multi-table LSH: one corpus scan, bucket equi-join, no cross join") {

@@ -163,11 +163,13 @@ class StreamingCountersSpec extends SparkTestBase {
   test("corrupt JSON records surface as side-channel failures (counter.go:245-248)") {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType)))
-    val raw = Seq("""{"user_id": 7}""", """not json at all""", """{"user_id": 9}""")
-      .toDF("value")
+    val raw = Seq(Some("""{"user_id": 7}"""), Some("""not json at all"""),
+      Some("""{"user_id": 9}"""), None).toDF("value")
     val parsed = StreamingCounters.parseRecords(raw, schema)
-    assert(StreamingCounters.parsedOk(parsed).select("user_id").as[Long].collect().sorted
-      .toSeq == Seq(7L, 9L))
+    assert(parsed.columns.toSeq == Seq("value", "user_id", "_corrupt"))
+    // a null payload parses to one row of nulls, not to a failure
+    assert(StreamingCounters.parsedOk(parsed).select("user_id").as[Option[Long]].collect()
+      .toSeq.sortBy(_.getOrElse(-1L)) == Seq(None, Some(7L), Some(9L)))
     val failures = StreamingCounters.failures(parsed).as[String].collect()
     assert(failures.toSeq == Seq("not json at all"))
   }

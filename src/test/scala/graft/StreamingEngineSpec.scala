@@ -156,6 +156,29 @@ class StreamingEngineSpec extends SparkTestBase {
     } finally blocker.stop()
   }
 
+  test("a counter id with a dot runs and puts its records") {
+    implicit val sc = spark.sqlContext
+    val out = "    output_stream_arn: \"arn:aws:kinesis:ap-northeast-1:111122223333:stream/out\"\n"
+    val cfg = config("counters:\n" +
+      counter("clicks.v2", "1 minute", out + "    target_expr: 'action == \"click\"'\n") +
+      counter("users.v2", "1 minute",
+        out + "    counter_type: approx_count_distinct\n    target_column: user_id\n"))
+    val input = MemoryStream[(Timestamp, Array[Byte])]
+    val queries = StreamingEngine.run(input.toDF().toDF("ts", "value"), schema, "ts", cfg, source,
+      new TaggedPutter("dotted"), watermarkDelay = "5 seconds", queryNamePrefix = "dotted")
+    try {
+      input.addData((ts(0), packed(1L -> "click", 2L -> "view", 3L -> "click")),
+        (ts(5), plain(1L, "click")))
+      queries.values.foreach(_.processAllAvailable())
+      input.addData((ts(70), plain(4L, "view"))) // closes [0, 60)
+      queries.values.foreach(_.processAllAvailable())
+      val puts = taken("dotted").filter(_._3.contains(s""""window_start":$base,"""))
+      assert(puts.map(_._2).sorted == Seq("clicks.v2", "users.v2"), puts)
+      assert(puts.exists(p => p._2 == "clicks.v2" && p._3.contains(""""value":3""")), puts)
+      assert(puts.exists(p => p._2 == "users.v2" && p._3.contains(""""value":3""")), puts)
+    } finally queries.values.foreach(_.stop())
+  }
+
   test("a failing sink stops its width's query alone and re-puts nothing") {
     implicit val sc = spark.sqlContext
     val cfg = config("counters:\n" +

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, window}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project,
   RepartitionOperation, SubqueryAlias}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -74,8 +73,8 @@ object Engine {
     * one after another in config order, so their lines never interleave.
     *
     * The routed counters of [[Counters.fansOut]] types that share a window
-    * width run as ONE aggregation ([[widthAggregate]]), persisted on disk
-    * and read by each of their sink jobs; the others run their own
+    * width run as ONE aggregation ([[Counters.widthAggregate]]), persisted
+    * on disk and read by each of their sink jobs; the others run their own
     * [[pipeline]]. The input is persisted on disk too when two or more of
     * these plans read it, it is not yet persisted, and it does more than
     * read parquet files ([[readsParquetFiles]]: there each plan's own read
@@ -90,12 +89,14 @@ object Engine {
           shardCol: Option[String] = None): Unit = {
     val arn = Some(eventSource.toString)
     val routed = config.counters.filter(_.matchesSource(eventSource, config.arnMatchCompat))
-    val widths = routed.filter(Counters.fansOut).groupBy(_.windowDuration)
-    val aggregates = widths.map { case (w, cs) => w -> widthAggregate(df, tsCol, cs, shardCol) }
+    val widths = Counters.byWidth(routed.filter(Counters.fansOut))
+    val aggregates = widths.map(Counters.widthAggregate(df, tsCol, _, shardCol))
+    // each width's rows in its counters' order, which is routed order
+    val rows = widths.zip(aggregates).map { case (cs, agg) =>
+      cs.head.windowDuration -> Counters.counterRows(agg, cs, shardCol.isDefined, arn).iterator
+    }.toMap
     val outs = routed.map { c =>
-      val w = c.windowDuration
-      c -> (if (Counters.fansOut(c))
-        withJq(counterRows(aggregates(w), widths(w).indexOf(c), c, shardCol.isDefined, arn), c)
+      c -> (if (Counters.fansOut(c)) withJq(rows(c.windowDuration).next(), c)
       else pipeline(df, tsCol, c, shardCol, arn))
     }
     val plans = widths.size + routed.count(!Counters.fansOut(_))
@@ -104,51 +105,15 @@ object Engine {
     // the input first: an aggregate persisted after it plans its read from
     // the input's copy
     if (sharedInput) df.persist(StorageLevel.DISK_ONLY)
-    aggregates.values.foreach(_.persist(StorageLevel.DISK_ONLY))
+    aggregates.foreach(_.persist(StorageLevel.DISK_ONLY))
     try Sinks.writeAll(outs, putter)
     finally {
       // the aggregates first: unpersisting the input re-plans what still
       // caches a plan over it
-      aggregates.values.foreach(_.unpersist())
+      aggregates.foreach(_.unpersist())
       if (sharedInput) df.unpersist()
     }
   }
-
-  /** One window width's counters as ONE aggregation grouped by window (and
-    * `shard_id`, the shard column as a string, when the input is sharded),
-    * with column `__agg_<i>` for the width's i-th counter: its partial
-    * state ([[Counters.partialAgg]]) for a two-phase counter over a sharded
-    * input, its finished value ([[Counters.aggExpr]]) otherwise. Its rows
-    * grow with windows × shards, not with input rows.
-    */
-  private def widthAggregate(df: DataFrame, tsCol: String, cs: Seq[CounterDef],
-                             shardCol: Option[String]): DataFrame = {
-    val aggs = cs.zipWithIndex.map { case (c, i) =>
-      val agg = if (twoPhase(c, shardCol.isDefined)) Counters.partialAgg(df, c)
-                else Counters.aggExpr(df, c)
-      agg.as(s"__agg_$i")
-    }
-    val keys = window(col(tsCol), cs.head.windowDuration) +:
-      shardCol.map(s => col(s).cast("string").as("shard_id")).toSeq
-    df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Counter `c`'s rows of its width's aggregate, column `__agg_<i>`, as
-    * [[pipeline]] emits them before jq: a two-phase counter's partials
-    * merge across shards ([[Counters.mergePartials]]); a per-shard
-    * counter keeps `shard_id`.
-    */
-  private def counterRows(agg: DataFrame, i: Int, c: CounterDef, sharded: Boolean,
-                          arn: Option[String]): DataFrame = {
-    val v = col(s"__agg_$i")
-    if (twoPhase(c, sharded))
-      Counters.finalizeOutput(
-        Counters.mergePartials(agg.withColumn(Counters.partialColumn(c), v), c), c, arn)
-    else Counters.finalizeOutput(agg.withColumn("value", v), c, arn, includeShard = sharded)
-  }
-
-  private def twoPhase(c: CounterDef, sharded: Boolean): Boolean =
-    sharded && c.aggregateStreamArn.isDefined
 
   /** Whether `plan` only reads parquet files through projections, filters
     * and repartitions: Catalyst then prunes each consumer's read to the

@@ -53,7 +53,9 @@ object CounterType {
 /** One counter (`config.go:25-38`).
   *
   * @param id            counter id; becomes `counter_id` in the output
-  * @param counterType   count | approx_count_distinct
+  * @param counterType   count | approx_count_distinct | value_sum |
+  *                      value_min | value_max | value_quantile |
+  *                      heavy_hitters
   * @param targetColumn  top-level field to count; `"*"` counts every record
   *                      (illegal for ACD, `config.go:106-108`)
   * @param targetExpr    alternative: expression in the target_expr dialect

@@ -135,27 +135,47 @@ object Counters {
     else max(centsOf(value))
   }
 
-  /** The partial-state column of every counter type that has one aggregate
-    * Column: the types a fan-out aggregation carries ([[fanOut]],
-    * `graft.Engine.run`, `StreamingCounters.fanOut`). `value_quantile` and
-    * `heavy_hitters` pick or rank per window and have their own shapes.
+  /** One single-column counter type's mergeable summary — its member of
+    * the reference's `CounterState` tagged union (`counter.go:78-82`):
+    * `partial` names the per-(window, shard) state column that
+    * [[partialState]] writes and [[mergePartials]] reads, `state` the
+    * intermediate record's `counter_state` field, `encode`/`decode` map
+    * one to the other (`graft.operators.Intermediate`), and `merge` is the
+    * cross-shard aggregate over partials.
     */
-  private val PartialColumn: ListMap[CounterType, String] = ListMap(
-    CounterType.Count -> "partial_count",
-    CounterType.ApproxCountDistinct -> "partial_sketch",
-    CounterType.ValueSum -> "partial_sum",
-    CounterType.ValueMin -> "partial_extreme",
-    CounterType.ValueMax -> "partial_extreme")
+  private[graft] final case class Summary(partial: String, state: String,
+                                          encode: Column => Column, decode: Column => Column,
+                                          merge: Column => Column)
+
+  /** The types with one aggregate Column, the types a fan-out aggregation
+    * carries ([[fanOut]], [[widthAggregate]]). `value_quantile` and
+    * `heavy_hitters` pick or rank per window and have their own shapes.
+    * The two extremes share one record field: the `counter_type` tag
+    * tells them apart.
+    */
+  private val Summaries: ListMap[CounterType, Summary] = {
+    def plain(partial: String, state: String, merge: Column => Column) =
+      Summary(partial, state, identity, identity, merge)
+    ListMap(
+      CounterType.Count -> plain("partial_count", "row_count", sum(_).cast("long")),
+      CounterType.ApproxCountDistinct -> Summary("partial_sketch", "base64_hll",
+        base64, unbase64, p => hll_sketch_estimate(hll_union_agg(p))),
+      CounterType.ValueSum -> plain("partial_sum", "sum_cents", sum(_).cast("long")),
+      CounterType.ValueMin -> plain("partial_extreme", "extreme_cents", min(_).cast("long")),
+      CounterType.ValueMax -> plain("partial_extreme", "extreme_cents", max(_).cast("long")))
+  }
 
   /** Whether `c` has one aggregate Column ([[aggExpr]], [[partialAgg]]),
     * so that it can share a groupBy with other counters.
     */
-  def fansOut(c: CounterDef): Boolean = PartialColumn.contains(c.counterType)
+  def fansOut(c: CounterDef): Boolean = Summaries.contains(c.counterType)
 
-  /** The name [[partialState]] gives `c`'s partial column, which
-    * [[mergePartials]] reads.
+  /** `c`'s [[Summary]]; for the types without one, fails naming `c` and
+    * `otherwise`, which says where those go instead.
     */
-  private[graft] def partialColumn(c: CounterDef): String = PartialColumn(c.counterType)
+  private[graft] def summary(c: CounterDef, otherwise: => String): Summary =
+    Summaries.getOrElse(c.counterType,
+      throw new IllegalArgumentException(s"counter ${c.id}: $otherwise"))
 
   /** The per-counter aggregate expression, usable standalone or fanned out
     * (several counters in ONE groupBy pass — see [[fanOut]]).
@@ -176,7 +196,7 @@ object Counters {
           s"counter ${c.id}: ${c.counterType.name} has no single-Column " +
             "aggregate — use Counters.run/runPerShard/runTwoPhase " +
             "(sliding/session/fanOut topologies support " +
-            PartialColumn.keys.map(_.name).mkString("/") + " only)")
+            Summaries.keys.map(_.name).mkString("/") + " only)")
     }
 
   /** `c`'s per-(window, shard) partial state as one aggregate Column: the
@@ -371,8 +391,9 @@ object Counters {
   }
 
   /** Phase 1: per-(window, shard) partial state — the IntermediateRecord
-    * (`counter.go:483-491`): [[partialAgg]] in [[partialColumn]], e.g. a
-    * partial row count or HLL sketch bytes (mergeable, bounded size).
+    * (`counter.go:483-491`): [[partialAgg]] in its [[Summary]]'s column,
+    * e.g. a partial row count or HLL sketch bytes (mergeable, bounded
+    * size).
     */
   def partialState(df: DataFrame, tsCol: String, shardCol: String, c: CounterDef): DataFrame =
     c.counterType match {
@@ -401,31 +422,17 @@ object Counters {
             .as("partial_counts"))
       case _ =>
         windowed(df, tsCol, c, Seq(col(shardCol).as("shard_id")))
-          .agg(partialAgg(df, c).as(partialColumn(c)))
+          .agg(partialAgg(df, c).as(Summaries(c.counterType).partial))
     }
 
-  /** Phase 2: merge partials across shards (`counter.go:372-403`):
-    * count → sum of partial counts; ACD → HLL union + estimate;
-    * extension types → concat + re-sum, then the same quantile pick /
-    * rank as single-phase (the shard hop must be invisible).
+  /** Phase 2: merge partials across shards (`counter.go:372-403`): the
+    * [[Summary]]'s `merge` (count → sum of partial counts; ACD → HLL
+    * union + estimate; …); `value_quantile`/`heavy_hitters` → concat +
+    * re-sum, then the same quantile pick / rank as single-phase (the shard
+    * hop must be invisible).
     */
   def mergePartials(partial: DataFrame, c: CounterDef): DataFrame =
     c.counterType match {
-      case CounterType.Count =>
-        partial.groupBy(col("window"))
-          .agg(sum(col("partial_count")).cast("long").as("value"))
-      case CounterType.ApproxCountDistinct =>
-        partial.groupBy(col("window"))
-          .agg(hll_sketch_estimate(hll_union_agg(col("partial_sketch"))).as("value"))
-      case CounterType.ValueSum =>
-        partial.groupBy(col("window"))
-          .agg(sum(col("partial_sum")).cast("long").as("value"))
-      case CounterType.ValueMin =>
-        partial.groupBy(col("window"))
-          .agg(min(col("partial_extreme")).cast("long").as("value"))
-      case CounterType.ValueMax =>
-        partial.groupBy(col("window"))
-          .agg(max(col("partial_extreme")).cast("long").as("value"))
       case CounterType.ValueQuantile =>
         val hist = partial
           .select(col("window"), explode(col("partial_hist")).as("h"))
@@ -449,6 +456,9 @@ object Counters {
         counts
           .withColumn("rank", row_number().over(w).cast("long"))
           .where(col("rank") <= c.topK)
+      case t =>
+        val s = Summaries(t)
+        partial.groupBy(col("window")).agg(s.merge(col(s.partial)).as("value"))
     }
 
   /** ENGINE EXTENSION beyond the reference (tumbling-only, README.md:44):
@@ -509,12 +519,12 @@ object Counters {
   }
 
   /** O16 multi-counter fan-out: ALL counters sharing a window width run in
-    * ONE groupBy pass — one scan, one shuffle — as conditional aggregates;
-    * the per-counter rows are then unpivoted from the (tiny) aggregated
-    * result by a single `explode` (not an N-way self-union, so the
-    * aggregation exists once in the plan — which also makes this legal
-    * after a streaming aggregation). At 100 TB this is the difference
-    * between N full scans and 1.
+    * ONE groupBy pass — one scan, one shuffle — as conditional aggregates
+    * ([[widthAggregate]]); the per-counter rows are then unpivoted from the
+    * (tiny) aggregated result by a single `explode` (not an N-way
+    * self-union, so the aggregation exists once in the plan — which also
+    * makes this legal after a streaming aggregation). At 100 TB this is the
+    * difference between N full scans and 1.
     */
   def fanOut(df: DataFrame, tsCol: String, counters: Seq[CounterDef],
              eventSourceArn: Option[String] = None): DataFrame = {
@@ -522,21 +532,61 @@ object Counters {
     // the conditional-aggregate trick needs one agg Column per counter;
     // quantile/rank counters have their own shapes — run them via `run`
     require(counters.forall(fansOut),
-      "fanOut supports " + PartialColumn.keys.map(_.name).mkString("/") +
+      "fanOut supports " + Summaries.keys.map(_.name).mkString("/") +
         " counters only; run value_quantile/heavy_hitters counters individually")
-    val byWindow = counters.groupBy(_.windowDuration).toSeq.sortBy(_._1)
-    byWindow.map { case (w, cs) =>
-      val aggs = cs.zipWithIndex.map { case (c, i) => aggExpr(df, c).as(s"__agg_$i") }
-      unpivotCounters(df.groupBy(window(col(tsCol), w)).agg(aggs.head, aggs.tail: _*),
-        cs, eventSourceArn)
+    byWidth(counters).sortBy(_.head.windowDuration).map { cs =>
+      unpivotCounters(widthAggregate(df, tsCol, cs, None), cs, eventSourceArn)
     }.reduce(_.union(_))
   }
 
+  /** `cs` grouped by window width, the widths and each width's counters in
+    * `cs`'s order.
+    */
+  private[graft] def byWidth(cs: Seq[CounterDef]): Seq[Seq[CounterDef]] =
+    cs.map(_.windowDuration).distinct.map(w => cs.filter(_.windowDuration == w))
+
+  /** The counters `cs` of one window width as ONE aggregation grouped by
+    * window (and `shard_id`, the shard column as a string, when the input
+    * is sharded), with column `__agg_<i>` for `cs(i)`: its partial state
+    * ([[partialAgg]]) for a two-phase counter over a sharded input, its
+    * finished value ([[aggExpr]]) otherwise. Its rows grow with windows ×
+    * shards, not with input rows. The batch and streaming engines and
+    * both [[fanOut]]s build their aggregations here.
+    */
+  private[graft] def widthAggregate(df: DataFrame, tsCol: String, cs: Seq[CounterDef],
+                                    shardCol: Option[String]): DataFrame = {
+    val aggs = cs.zipWithIndex.map { case (c, i) =>
+      val agg = if (twoPhase(c, shardCol.isDefined)) partialAgg(df, c) else aggExpr(df, c)
+      agg.as(s"__agg_$i")
+    }
+    val keys = window(col(tsCol), cs.head.windowDuration) +:
+      shardCol.map(s => col(s).cast("string").as("shard_id")).toSeq
+    df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Each of `cs`'s rows of `agg`, a [[widthAggregate]] over `cs` or a
+    * micro-batch of one, as `graft.Engine.pipeline` emits them before jq:
+    * `cs(i)` reads column `__agg_<i>`, so counters that share an id keep
+    * their own rows. A two-phase counter's partials merge across shards
+    * ([[mergePartials]]); a per-shard counter keeps `shard_id`.
+    */
+  private[graft] def counterRows(agg: DataFrame, cs: Seq[CounterDef], sharded: Boolean,
+                                 arn: Option[String]): Seq[DataFrame] =
+    cs.zipWithIndex.map { case (c, i) =>
+      val v = col(s"__agg_$i")
+      if (twoPhase(c, sharded))
+        finalizeOutput(mergePartials(agg.withColumn(Summaries(c.counterType).partial, v), c), c, arn)
+      else finalizeOutput(agg.withColumn("value", v), c, arn, includeShard = sharded)
+    }
+
+  private def twoPhase(c: CounterDef, sharded: Boolean): Boolean =
+    sharded && c.aggregateStreamArn.isDefined
+
   /** Unpivot one wide aggregated row (window, __agg_0, …, __agg_<N-1>) into
-    * N output records via a single generator — shared by batch and
-    * streaming fan-out. Column `__agg_<i>` holds counter `cs(i)`'s value:
-    * named by position, since a counter id may contain a dot, which `col`
-    * would read as a struct field.
+    * N output records via a single generator — the one-frame output of the
+    * batch and streaming [[fanOut]]s. Column `__agg_<i>` holds counter
+    * `cs(i)`'s value: named by position, since a counter id may contain a
+    * dot, which `col` would read as a struct field.
     */
   private[graft] def unpivotCounters(agged: DataFrame, cs: Seq[CounterDef],
                                      eventSourceArn: Option[String]): DataFrame = {

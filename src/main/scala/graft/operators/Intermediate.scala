@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.config.{ConfigLoader, CounterDef, CounterType, VersionConstraint}
+import graft.config.{ConfigLoader, CounterDef, VersionConstraint}
 
 /** The reference's `IntermediateRecord` — the per-shard partial aggregate
   * shipped over the aggregate stream for the cross-shard merge phase
@@ -48,27 +48,8 @@ object Intermediate {
   def toRecords(partial: DataFrame, c: CounterDef,
                 eventSourceArn: String,
                 counterVersion: String = ConfigLoader.EngineVersion): DataFrame = {
-    val state = c.counterType match {
-      case CounterType.Count =>
-        struct(col("partial_count").as("row_count"))
-      case CounterType.ApproxCountDistinct =>
-        struct(base64(col("partial_sketch")).as("base64_hll"))
-      case CounterType.ValueSum =>
-        struct(col("partial_sum").as("sum_cents"))
-      case CounterType.ValueMin | CounterType.ValueMax =>
-        // one union member for both extremes — the counter_type tag (which
-        // the consumer filters on) disambiguates, like the reference's
-        // count-vs-ACD states
-        struct(col("partial_extreme").as("extreme_cents"))
-      case CounterType.ValueQuantile | CounterType.HeavyHitters =>
-        // the generic JSON hop carries the reference's two state shapes
-        // (counter.go:78-82); the extension types ride their own typed
-        // records with the same envelope/gating (e10/e11)
-        throw new IllegalArgumentException(
-          s"counter ${c.id}: serialized intermediate records for " +
-            s"${c.counterType.name} use Intermediate.toQuantileRecords/" +
-            "toHitterRecords")
-    }
+    val s = Counters.summary(c, "serialized intermediate records for " +
+      s"${c.counterType.name} use Intermediate.toQuantileRecords/toHitterRecords")
     partial.select(
       lit(c.id).as("partition_key"),
       to_json(struct(
@@ -81,7 +62,7 @@ object Intermediate {
           date_format(col("window.start"), "yyyy-MM-dd'T'HH:mm:ssXXX").as("start"),
           date_format(col("window.end"), "yyyy-MM-dd'T'HH:mm:ssXXX").as("end")
         ).as("window"),
-        state.as("counter_state"))).as("value"))
+        struct(s.encode(col(s.partial)).as(s.state)).as("counter_state"))).as("value"))
   }
 
   private val recordSchema: StructType = StructType(Seq(
@@ -186,43 +167,22 @@ object Intermediate {
     */
   def parse(records: DataFrame, c: CounterDef,
             requiredVersion: Option[String] = None): DataFrame = {
+    val s = Counters.summary(c, "serialized intermediate records for " +
+      s"${c.counterType.name} parse via Intermediate.parseQuantiles/parseHitters")
     val versionOk: Column = requiredVersion.map(VersionConstraint(_)) match {
       case None => lit(true)
       case Some(vc) => versionCheck(vc, col("r.counter_version"))
     }
-    val parsed = records
+    records
       .select(from_json(col("value"), recordSchema).as("r"))
       .where(col("r").isNotNull &&
         col("r.counter_id") === c.id &&
         col("r.counter_type") === c.counterType.name &&
         versionOk)
-    c.counterType match {
-      case CounterType.ValueQuantile | CounterType.HeavyHitters =>
-        throw new IllegalArgumentException(
-          s"counter ${c.id}: serialized intermediate records for " +
-            s"${c.counterType.name} parse via Intermediate.parseQuantiles/" +
-            "parseHitters")
-      case CounterType.Count =>
-        parsed.select(
-          struct(col("r.window.start").as("start"), col("r.window.end").as("end")).as("window"),
-          col("r.shard_id"),
-          col("r.counter_state.row_count").as("partial_count"))
-      case CounterType.ApproxCountDistinct =>
-        parsed.select(
-          struct(col("r.window.start").as("start"), col("r.window.end").as("end")).as("window"),
-          col("r.shard_id"),
-          unbase64(col("r.counter_state.base64_hll")).as("partial_sketch"))
-      case CounterType.ValueSum =>
-        parsed.select(
-          struct(col("r.window.start").as("start"), col("r.window.end").as("end")).as("window"),
-          col("r.shard_id"),
-          col("r.counter_state.sum_cents").as("partial_sum"))
-      case CounterType.ValueMin | CounterType.ValueMax =>
-        parsed.select(
-          struct(col("r.window.start").as("start"), col("r.window.end").as("end")).as("window"),
-          col("r.shard_id"),
-          col("r.counter_state.extreme_cents").as("partial_extreme"))
-    }
+      .select(
+        struct(col("r.window.start").as("start"), col("r.window.end").as("end")).as("window"),
+        col("r.shard_id"),
+        s.decode(col(s"r.counter_state.${s.state}")).as(s.partial))
   }
 
   /** The full aggregate-stream consumer (`counter.go:348-412`): parse +

@@ -382,14 +382,11 @@ object StreamingCounters {
     require(counters.nonEmpty, "fanOut requires at least one counter")
     require(counters.map(_.windowDuration).distinct.size == 1,
       "streaming fanOut requires a shared window duration")
-    val watermarked = stream.withWatermark(tsCol, watermarkDelay)
-    val aggs = counters.zipWithIndex.map { case (c, i) => Counters.aggExpr(stream, c).as(s"__agg_$i") }
-    val agged = watermarked
-      .groupBy(window(col(tsCol), counters.head.windowDuration))
-      .agg(aggs.head, aggs.tail: _*)
     // Single aggregation + one generator (NOT an N-way union of the agg,
     // which would plan N streaming aggregations and be rejected).
-    Counters.unpivotCounters(agged, counters, eventSourceArn)
+    Counters.unpivotCounters(
+      Counters.widthAggregate(stream.withWatermark(tsCol, watermarkDelay), tsCol, counters, None),
+      counters, eventSourceArn)
   }
 
   /** Streaming sliding windows (ENGINE EXTENSION, batch parity with
@@ -599,30 +596,6 @@ object StreamingCounters {
         count(lit(1)).as("n_events"))
       .select(col(keyCol), col("start_ms"), col("end_ms"), col("n_events"))
 
-  /** The reference's EXPLICIT window-state protocol, on Spark's custom
-    * state API: the Lambda contract hands the handler carried-forward
-    * per-(window, shard) state and re-injects what it returns
-    * (`counter.go:150-204`, state round-trip `counter.go:210-231`),
-    * emitting the output record on `isFinalInvokeForWindow`
-    * (`counter.go:339-344`). `flatMapGroupsWithState` is that exact
-    * protocol: the state store carries a `CounterStateBuf` per
-    * (window, shard) key across micro-batches — `row_count` for count, a
-    * serialized DataSketches HLL (lgK=16, the reference's precision) for
-    * ACD — and the event-time timeout at window end IS the final invoke,
-    * where the record is emitted and the state dropped.
-    *
-    * [[run]] (engine-managed aggregation state) is the idiomatic path;
-    * this one exists for state-protocol parity and for topologies needing
-    * custom per-window state (it is also what a Lambda-style incremental
-    * deployment would checkpoint). `valueCol`: null = row does not
-    * qualify (the O5–O7 projection happens upstream); for
-    * `target_column: "*"` pass a non-null literal.
-    *
-    * Scale: one shuffle on (window, shard) into the state store; state
-    * size is bounded by live windows × shards × sketch size — the same
-    * envelope as the reference's 1 MB Lambda state ceiling, minus the
-    * ceiling (the store is disk-backed).
-    */
   /** The (window, shard, value) projection both arbitrary-state paths fold
     * over — ONE definition so [[runCustomState]] and [[runCustomStateTws]]
     * can never drift apart.
@@ -666,6 +639,30 @@ object StreamingCounters {
     warnAccs.getOrElseUpdate(spark.sparkContext.applicationId,
       spark.sparkContext.longAccumulator("graft.oversizedStateWarnings"))
 
+  /** The reference's EXPLICIT window-state protocol, on Spark's custom
+    * state API: the Lambda contract hands the handler carried-forward
+    * per-(window, shard) state and re-injects what it returns
+    * (`counter.go:150-204`, state round-trip `counter.go:210-231`),
+    * emitting the output record on `isFinalInvokeForWindow`
+    * (`counter.go:339-344`). `flatMapGroupsWithState` is that exact
+    * protocol: the state store carries a `CounterStateBuf` per
+    * (window, shard) key across micro-batches — `row_count` for count, a
+    * serialized DataSketches HLL (lgK=16, the reference's precision) for
+    * ACD — and the event-time timeout at window end IS the final invoke,
+    * where the record is emitted and the state dropped.
+    *
+    * [[run]] (engine-managed aggregation state) is the idiomatic path;
+    * this one exists for state-protocol parity and for topologies needing
+    * custom per-window state (it is also what a Lambda-style incremental
+    * deployment would checkpoint). `valueCol`: null = row does not
+    * qualify (the O5–O7 projection happens upstream); for
+    * `target_column: "*"` pass a non-null literal.
+    *
+    * Scale: one shuffle on (window, shard) into the state store; state
+    * size is bounded by live windows × shards × sketch size — the same
+    * envelope as the reference's 1 MB Lambda state ceiling, minus the
+    * ceiling (the store is disk-backed).
+    */
   def runCustomState(stream: DataFrame, tsCol: String, c: CounterDef,
                      valueCol: Column,
                      watermarkDelay: String = "10 seconds",
@@ -769,21 +766,6 @@ object StreamingCounters {
       .toDF()
   }
 
-  /** Streaming face of the sketch HEAVY-HITTER counter — e14's mergeable
-    * Misra–Gries summary held as `transformWithState` state
-    * ([[HitterSketchProcessor]]); with [[quantileSketchStream]] this
-    * closes the family: every counter type now runs in both topologies.
-    * Emits one (window_start, keys, counts) summary per window when the
-    * watermark passes its end — feed the result (collected from the
-    * sink) to [[graft.relational.Temporal.hitterGateFromSummaries]] for
-    * the exact top-k + measured Misra–Gries-bound verdicts restricted to
-    * the closed windows.
-    *
-    * Scale shape: stateless codegen projection to (window bounds, key);
-    * ONE window-keyed shuffle; state per window is one O(capacity)
-    * summary regardless of the key domain (the exact face's state is per
-    * DISTINCT key). Requires the RocksDB state store provider.
-    */
   /** STREAMING face of the count–min sketch counter
     * ([[graft.relational.Temporal.cmsCounters]]): the per-window counter
     * cells as a plain watermarked windowed aggregation — deliberately NO
@@ -820,6 +802,21 @@ object StreamingCounters {
         col("j"), col("bucket"), col("cnt"))
   }
 
+  /** Streaming face of the sketch HEAVY-HITTER counter — e14's mergeable
+    * Misra–Gries summary held as `transformWithState` state
+    * ([[HitterSketchProcessor]]); with [[quantileSketchStream]] this
+    * closes the family: every counter type now runs in both topologies.
+    * Emits one (window_start, keys, counts) summary per window when the
+    * watermark passes its end — feed the result (collected from the
+    * sink) to [[graft.relational.Temporal.hitterGateFromSummaries]] for
+    * the exact top-k + measured Misra–Gries-bound verdicts restricted to
+    * the closed windows.
+    *
+    * Scale shape: stateless codegen projection to (window bounds, key);
+    * ONE window-keyed shuffle; state per window is one O(capacity)
+    * summary regardless of the key domain (the exact face's state is per
+    * DISTINCT key). Requires the RocksDB state store provider.
+    */
   def hitterSketchStream(stream: DataFrame, tsCol: String,
                          windowDuration: String = "1 hour",
                          watermarkDelay: String = "0 seconds",
@@ -843,9 +840,10 @@ object StreamingCounters {
     * `counter.go:348-412`, ticker-driven close `run.go:201-270`): a stream
     * of intermediate-record JSON (from per-shard jobs shipping
     * [[Intermediate.toRecords]] payloads) is parsed, filtered to this
-    * counter + compatible versions, and merged per window — `sum` of
-    * partial counts or HLL-sketch union — with the watermark as the
-    * window-close signal. Re-windowing on the records' own `window.start`
+    * counter + compatible versions, and merged per window by its type's
+    * `Counters.Summary` merge (`sum` of partial counts, HLL-sketch union,
+    * …) with the watermark as the window-close signal. Re-windowing on
+    * the records' own `window.start`
     * reproduces the original bucket (starts are aligned) while giving the
     * streaming engine a real event-time window to finalize.
     */
@@ -853,28 +851,15 @@ object StreamingCounters {
                         watermarkDelay: String = "10 seconds",
                         requiredVersion: Option[String] = None,
                         eventSourceArn: Option[String] = None): DataFrame = {
+    val summary = Counters.summary(c, "the streaming intermediate consumer merges " +
+      "count/ACD/sum/min/max states; quantile/hitter records merge via " +
+      "Intermediate.mergeQuantileRecords/mergeHitterRecords")
     val parsed = Intermediate.parse(records, c, requiredVersion)
       .withColumn("__ws", col("window.start"))
       .drop("window")
       .withWatermark("__ws", watermarkDelay)
-    val grouped = parsed.groupBy(window(col("__ws"), c.windowDuration))
-    val merged = c.counterType match {
-      case CounterType.Count =>
-        grouped.agg(sum(col("partial_count")).cast("long").as("value"))
-      case CounterType.ApproxCountDistinct =>
-        grouped.agg(hll_sketch_estimate(hll_union_agg(col("partial_sketch"))).as("value"))
-      case CounterType.ValueSum =>
-        grouped.agg(sum(col("partial_sum")).cast("long").as("value"))
-      case CounterType.ValueMin =>
-        grouped.agg(min(col("partial_extreme")).cast("long").as("value"))
-      case CounterType.ValueMax =>
-        grouped.agg(max(col("partial_extreme")).cast("long").as("value"))
-      case CounterType.ValueQuantile | CounterType.HeavyHitters =>
-        throw new IllegalArgumentException(
-          s"counter ${c.id}: the streaming intermediate consumer merges " +
-            "count/ACD states; quantile/hitter records merge via " +
-            "Intermediate.mergeQuantileRecords/mergeHitterRecords")
-    }
+    val merged = parsed.groupBy(window(col("__ws"), c.windowDuration))
+      .agg(summary.merge(col(summary.partial)).as("value"))
     Counters.finalizeOutput(merged, c, eventSourceArn)
   }
 }

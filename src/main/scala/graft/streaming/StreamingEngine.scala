@@ -4,12 +4,11 @@ import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 import graft.config.{AppConfig, Arn, CounterDef}
-import graft.operators.JqTransform
+import graft.operators.{Counters, JqTransform}
 import graft.sinks.Sinks
 
 /** The composed STREAMING application — the reference's whole Lambda
@@ -21,22 +20,25 @@ import graft.sinks.Sinks
   *   → KPL deaggregate (O3)          StreamingCounters.parsePackedRecords
   *   → JSON parse + corrupt channel (O4)
   *   → ARN-route each configured counter (O16)
-  *   → per window width: ONE query  StreamingCounters.fanOut
-  *       tumbling window + watermark, every counter's count/ACD
-  *       (O8/O9/O12) as one aggregation over one state store
-  *   → foreachBatch: per counter, its rows → jq transform (O14)
-  *       → Sinks.writeAll → RecordPutter sink (O15)
+  *   → per window width: ONE query  Counters.widthAggregate
+  *       tumbling window + watermark, every counter's count/ACD/sum/
+  *       min/max (O8/O9/O12) as one aggregation over one state store:
+  *       one row (window, __agg_0, …) per closed window
+  *   → foreachBatch: per counter, its own column   Counters.counterRows
+  *       → jq transform (O14) → Sinks.writeAll → RecordPutter sink (O15)
   *   [+ the corrupt-record stream → its own sink: batchItemFailures]
   * }}}
   *
   * The routed counters that share a `window_duration` run as one streaming
   * query, as the reference runs all of a stream's counters over one
   * decoded batch (`counter.go:161-204`): one source read, one parse, one
-  * watermark, one aggregation, one offset log. Each micro-batch's emitted
-  * rows (at most counters × closing windows) are persisted once; a batch
-  * that closes no window puts nothing. Otherwise every counter's rows get
-  * its own `jq_expr` and go to its own sink through the same step the
-  * batch engine uses ([[Sinks.writeAll]]). Like the reference's errgroup
+  * watermark, one aggregation, one offset log, built by the same
+  * [[Counters.widthAggregate]] as the batch engine's. Each micro-batch's
+  * emitted rows (one per closing window) are persisted once; a batch that
+  * closes no window puts nothing. Otherwise counter `i` of the width reads
+  * column `__agg_<i>` by position, gets its own `jq_expr` and goes to its
+  * own sink through the same step the batch engine uses
+  * ([[Sinks.writeAll]]). Like the reference's errgroup
   * (`counter.go:172-198`), a failing sink or jq transform stops the whole
   * query, so the counters of one width fail together.
   *
@@ -64,18 +66,21 @@ object StreamingEngine {
     val parsed = StreamingCounters.parsePackedRecords(raw, schema, payloadCol)
     val ok = StreamingCounters.parsedOk(parsed)
     val routed = config.counters.filter(_.matchesSource(eventSource, config.arnMatchCompat))
-    val groups = routed.map(_.windowDuration).distinct.map { w =>
-      val cs = routed.filter(_.windowDuration == w)
-      val fanned = StreamingCounters.fanOut(ok, tsCol, cs, watermarkDelay,
-        Some(eventSource.toString))
-      val transforms = cs.map(c => c -> c.jqExpr.map(JqTransform.compile))
+    val arn = Some(eventSource.toString)
+    val groups = Counters.byWidth(routed).map { cs =>
+      val agg = Counters.widthAggregate(ok.withWatermark(tsCol, watermarkDelay), tsCol, cs, None)
+      val jqs = cs.map(_.jqExpr.map(JqTransform.compile))
+      // each counter's rows of the width aggregate or of one of its batches
+      def rows(frame: DataFrame): Seq[DataFrame] =
+        Counters.counterRows(frame, cs, sharded = false, arn).zip(jqs).map { case (r, jq) =>
+          jq.fold(r)(_(r)) }
       // a jq program that does not fit the counter's rows fails here, not
       // in the first batch that closes a window
-      transforms.foreach { case (c, jq) => counterRows(fanned, c, jq) }
-      cs -> fanned.writeStream
+      rows(agg)
+      cs -> agg.writeStream
         .queryName(s"$queryNamePrefix-${cs.map(_.id).mkString("-")}")
         .outputMode("append")
-        .foreachBatch((batch: DataFrame, _: Long) => sinkBatch(batch, transforms, putter))
+        .foreachBatch((batch: DataFrame, _: Long) => sinkBatch(batch, cs, rows, putter))
     }
     // the batchItemFailures analog (counter.go:245-248): corrupt payloads
     // flow to their own sink instead of failing the stream
@@ -105,28 +110,15 @@ object StreamingEngine {
     }
   }
 
-  /** `c`'s rows of a fan-out frame with its jq transform applied. Counter
-    * id and type become literals again, as in a one-counter frame, so jq
-    * branches on them prune at plan time the same way.
-    */
-  private def counterRows(fanned: DataFrame, c: CounterDef,
-                          jq: Option[DataFrame => DataFrame]): DataFrame = {
-    val rows = fanned.where(col("counter_id") === c.id)
-      .withColumn("counter_id", lit(c.id))
-      .withColumn("counter_type", lit(c.counterType.name))
-    jq.fold(rows)(_(rows))
-  }
-
   /** One micro-batch of a width's query: materialize the emitted rows once,
     * then sink each counter's share unless no window closed.
     */
-  private def sinkBatch(batch: DataFrame,
-                        transforms: Seq[(CounterDef, Option[DataFrame => DataFrame])],
+  private def sinkBatch(batch: DataFrame, cs: Seq[CounterDef],
+                        rows: DataFrame => Seq[DataFrame],
                         putter: Sinks.RecordPutter): Unit = {
     batch.persist()
     try {
-      if (batch.count() > 0)
-        Sinks.writeAll(transforms.map { case (c, jq) => c -> counterRows(batch, c, jq) }, putter)
+      if (batch.count() > 0) Sinks.writeAll(cs.zip(rows(batch)), putter)
     } finally batch.unpersist()
   }
 }

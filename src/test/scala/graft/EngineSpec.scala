@@ -387,6 +387,19 @@ class EngineSpec extends SparkTestBase with Eventually {
     // incompatible counter_version records are skipped (counter.go:366-368)
     val tooOld = Intermediate.mergeRecords(records, c, requiredVersion = Some(">=9.0.0"))
     assert(tooOld.count() == 0)
+    // every single-column type but ACD (its own tolerance test below): the
+    // record hop merges as the in-plan two-phase merge does
+    val want = Map(CounterType.Count -> n.toLong,
+      CounterType.ValueSum -> (0 until n).map(i => i % 50 * 100L).sum,
+      CounterType.ValueMin -> 0L, CounterType.ValueMax -> 4900L)
+    for ((t, value) <- want) {
+      val ct = c.copy(counterType = t, targetColumn = Some("user_id"))
+      val hop = Intermediate.mergeRecords(Intermediate.toRecords(
+        Counters.partialState(events, "ts", "shard", ct), ct, source.toString), ct)
+      val direct = Counters.runTwoPhase(events, "ts", "shard", ct)
+      assert(hop.collect().toSet == direct.collect().toSet, t.name)
+      assert(hop.select("value").as[Long].collect().toSeq == Seq(value), t.name)
+    }
   }
 
   test("intermediate ACD records merge sketches across shards") {

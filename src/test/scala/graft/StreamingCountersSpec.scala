@@ -176,30 +176,39 @@ class StreamingCountersSpec extends SparkTestBase {
 
   test("streaming aggregate-stream consumer merges intermediate records (EP3)") {
     implicit val sc = spark.sqlContext
-    val c = CounterDef("req", CounterType.Count, Some("*"), windowDuration = "1 minute")
-    // per-shard partials for two windows, serialized as the stream payload
-    val events = (0 until 40).map(i => (ts(i % 50), i.toLong % 4))
-      .toDF("ts", "shard")
-    val lateEvents = Seq((ts(600), 0L)).toDF("ts", "shard") // much later window
-    def records(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      graft.operators.Intermediate.toRecords(
-        graft.operators.Counters.partialState(df, "ts", "shard", c),
-        c, "arn:aws:kinesis:ap-northeast-1:1:stream/agg")
-        .select("value").as[String].collect().toSeq
-    val input = MemoryStream[String]
-    val out = StreamingCounters.mergeIntermediate(
-      input.toDF().toDF("value"), c, watermarkDelay = "5 seconds")
-    val query = out.writeStream.format("memory").queryName("stream_merge")
-      .outputMode("append").start()
-    try {
-      input.addData(records(events): _*)
-      query.processAllAvailable()
-      input.addData(records(lateEvents): _*) // watermark past first window
-      query.processAllAvailable()
-      val rows = spark.table("stream_merge")
-        .select("window_start", "value").as[(Long, Long)].collect().toMap
-      assert(rows(base) == 40L) // all four shards' partials summed
-    } finally query.stop()
+    // per-shard partials for two windows, serialized as the stream payload;
+    // `amount` differs across shards, so a wrong merge shows in sum/min/max
+    val events = (0 until 40).map(i => (ts(i % 50), i.toLong % 4, (i * 7 % 40) / 4.0))
+      .toDF("ts", "shard", "amount")
+    val lateEvents = Seq((ts(600), 0L, 1.0)).toDF("ts", "shard", "amount") // much later window
+    // ACD merges approximately: its own test below
+    for (t <- Seq(CounterType.Count, CounterType.ValueSum, CounterType.ValueMin, CounterType.ValueMax)) {
+      val target = if (t == CounterType.Count) "*" else "amount"
+      val c = CounterDef("req", t, Some(target), windowDuration = "1 minute")
+      def records(df: org.apache.spark.sql.DataFrame): Seq[String] =
+        graft.operators.Intermediate.toRecords(
+          graft.operators.Counters.partialState(df, "ts", "shard", c),
+          c, "arn:aws:kinesis:ap-northeast-1:1:stream/agg")
+          .select("value").as[String].collect().toSeq
+      val input = MemoryStream[String]
+      val out = StreamingCounters.mergeIntermediate(
+        input.toDF().toDF("value"), c, watermarkDelay = "5 seconds")
+      val query = out.writeStream.format("memory").queryName(s"stream_merge_${t.name}")
+        .outputMode("append").start()
+      try {
+        input.addData(records(events): _*)
+        query.processAllAvailable()
+        input.addData(records(lateEvents): _*) // watermark past first window
+        query.processAllAvailable()
+        // the closed window is the in-plan two-phase merge's only window
+        val got = spark.table(s"stream_merge_${t.name}").collect().toSet
+        val want = graft.operators.Counters.runTwoPhase(events, "ts", "shard", c).collect().toSet
+        assert(got == want, t.name)
+        if (t == CounterType.Count) // all four shards' partials summed
+          assert(got.map(r => r.getAs[Long]("window_start") -> r.getAs[Long]("value")) ==
+            Set(base -> 40L))
+      } finally query.stop()
+    }
   }
 
   test("streaming merge UNIONS ACD sketches across shards (EP3 approx path)") {

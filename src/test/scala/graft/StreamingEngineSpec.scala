@@ -69,12 +69,23 @@ class StreamingEngineSpec extends SparkTestBase {
         s"""    output_stream_arn: "${out}2"
            |    target_expr: 'action == "click"'
            |""".stripMargin),
+      counter("user_sum_1m", "1 minute",
+        s"""    output_stream_arn: "$out"
+           |    counter_type: value_sum
+           |    target_column: user_id
+           |""".stripMargin),
+      counter("user_max_2m", "2 minutes",
+        s"""    output_stream_arn: "${out}2"
+           |    counter_type: value_max
+           |    target_column: user_id
+           |""".stripMargin),
       """  - id: elsewhere
         |    input_stream_arn: "arn:aws:kinesis:*:*:stream/other"
         |    target_column: "*"
         |""".stripMargin).mkString)
     val routed = cfg.counters.filter(_.matchesSource(source, cfg.arnMatchCompat))
-    assert(routed.map(_.id) == Seq("all_1m", "buys_1m", "users_2m", "clicks_2m"))
+    assert(routed.map(_.id) ==
+      Seq("all_1m", "buys_1m", "users_2m", "clicks_2m", "user_sum_1m", "user_max_2m"))
 
     val input = MemoryStream[(Timestamp, Array[Byte])]
     val raw = input.toDF().toDF("ts", "value")
@@ -94,8 +105,10 @@ class StreamingEngineSpec extends SparkTestBase {
     try {
       assert(queries.keySet == routed.map(_.id).toSet + "__failures__")
       assert(queries("all_1m") eq queries("buys_1m"))
+      assert(queries("all_1m") eq queries("user_sum_1m"))
       assert(queries("users_2m") eq queries("clicks_2m"))
-      assert(queries("all_1m").name == "parity-new-all_1m-buys_1m")
+      assert(queries("users_2m") eq queries("user_max_2m"))
+      assert(queries("all_1m").name == "parity-new-all_1m-buys_1m-user_sum_1m")
       val running = spark.streams.active.filter(_.name.startsWith("parity-new"))
       assert(running.length == 3, running.map(_.name).toSeq) // 2 widths + failures
       assert(queries.values.toSeq.distinct.size == 3)
@@ -123,8 +136,52 @@ class StreamingEngineSpec extends SparkTestBase {
       // 1-minute windows [0, 60) and [60, 120); 2-minute windows
       // [-60 s, 60 s) and [60 s, 180 s)
       assert(got.count(_._2 == "all_1m") == 2 && got.count(_._2 == "users_2m") == 2, got)
+      // the user ids of [0, 60 s) (1, 2, 3, 4, 1, 5) sum to 1600 cents; 7 is
+      // the largest in [60 s, 180 s)
+      assert(got.exists(p => p._2 == "user_sum_1m" && p._3.contains(s""""window_start":$base,""") &&
+        p._3.contains(""""value":1600""")), got)
+      assert(got.exists(p => p._2 == "user_max_2m" && p._3.contains(""""value":700""")), got)
       assert(got.contains((out, "buys_1m", s"""{"t":${base + 60000},"id":"buys_1m","n":0}""")), got)
       assert(taken("parity-failures").map(_._3).sorted == Seq("corrupt! not json", "{oops"))
+    } finally all.foreach(_.stop())
+  }
+
+  test("counters that share an id each put their own records") {
+    implicit val sc = spark.sqlContext
+    val out = "    output_stream_arn: \"arn:aws:kinesis:ap-northeast-1:111122223333:stream/out\"\n"
+    val cfg = config("counters:\n" +
+      counter("dup", "1 minute", out + "    target_column: \"*\"\n") +
+      counter("dup", "1 minute",
+        out + "    counter_type: approx_count_distinct\n    target_column: user_id\n"))
+    val routed = cfg.counters.filter(_.matchesSource(source, cfg.arnMatchCompat))
+    assert(routed.map(_.counterType.name) == Seq("count", "approx_count_distinct"))
+    val input = MemoryStream[(Timestamp, Array[Byte])]
+    val raw = input.toDF().toDF("ts", "value")
+    val queries = StreamingEngine.run(raw, schema, "ts", cfg, source,
+      new TaggedPutter("dup-new"), watermarkDelay = "5 seconds", queryNamePrefix = "dup-new")
+    val ok = StreamingCounters.parsedOk(StreamingCounters.parsePackedRecords(raw, schema))
+    val oldQueries = routed.zipWithIndex.map { case (c, i) =>
+      val putter = new TaggedPutter(s"dup-old-$i")
+      StreamingCounters.pipeline(ok, "ts", c, "5 seconds", Some(source.toString))
+        .writeStream.queryName(s"dup-old-$i").outputMode("append")
+        .foreachBatch((batch: DataFrame, _: Long) => Sinks.write(batch, c, putter))
+        .start()
+    }
+    val all = queries.values.toSeq.distinct ++ oldQueries
+    try {
+      input.addData((ts(0), packed(1L -> "click", 1L -> "buy", 2L -> "click")),
+        (ts(5), plain(1L, "view")))
+      all.foreach(_.processAllAvailable())
+      input.addData((ts(70), plain(3L, "view"))) // closes [0, 60)
+      all.foreach(_.processAllAvailable())
+      val got = taken("dup-new")
+      val want = taken("dup-old-0") ++ taken("dup-old-1")
+      // one record per counter: count 4, distinct users 2
+      assert(want.map(_._3).count(_.contains(""""counter_type":"count","value":4""")) == 1, want)
+      assert(want.map(_._3)
+        .count(_.contains(""""counter_type":"approx_count_distinct","value":2""")) == 1, want)
+      assert(got.sorted == want.sorted,
+        s"\nnew: ${got.sorted.mkString("\n")}\nold: ${want.sorted.mkString("\n")}")
     } finally all.foreach(_.stop())
   }
 

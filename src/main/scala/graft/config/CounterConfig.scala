@@ -57,7 +57,7 @@ object CounterType {
   *                      value_min | value_max | value_quantile |
   *                      heavy_hitters
   * @param targetColumn  top-level field to count; `"*"` counts every record
-  *                      (illegal for ACD, `config.go:106-108`)
+  *                      (count only; illegal for ACD, `config.go:106-108`)
   * @param targetExpr    alternative: expression in the target_expr dialect
   * @param inputStreamArn  wildcard ARN pattern routing events to this counter
   * @param outputArn     concrete sink ARN (`config.go:81-86`); informational
@@ -100,30 +100,23 @@ final case class CounterDef(
     if (id.isEmpty) Left("counter id is required")
     else if (targetColumn.isEmpty && targetExpr.isEmpty)
       Left(s"counter $id: target_column or target_expr is required")
-    else if (targetColumn.contains("*") && counterType == CounterType.ApproxCountDistinct)
-      Left(s"counter $id: target_column '*' is not allowed for approx_count_distinct")
+    // '*' (every record) is a count: the reference forbids it for ACD
+    // (config.go:106-108), and the extension types need a real value or
+    // member to operate on
+    else if (targetColumn.contains("*") && counterType != CounterType.Count)
+      Left(s"counter $id: target_column '*' is not allowed for ${counterType.name}")
     else if (outputArn.exists(!_.isConcrete))
       Left(s"counter $id: output ARN must be concrete")
     else if (aggregateStreamArn.exists(!_.isConcrete))
       Left(s"counter $id: aggregate stream ARN must be concrete")
     else if (aggregateStreamArn.exists(_.service != "kinesis"))
       Left(s"counter $id: aggregate stream must be a kinesis stream")
-    // extension-type rules, in the spirit of the '*'-for-ACD rule: both
-    // need a real value/member to operate on, and their parameters must
-    // be in range
-    else if (targetColumn.contains("*") && counterType == CounterType.ValueQuantile)
-      Left(s"counter $id: target_column '*' is not allowed for value_quantile")
-    else if (targetColumn.contains("*") && counterType == CounterType.HeavyHitters)
-      Left(s"counter $id: target_column '*' is not allowed for heavy_hitters")
+    // extension-type parameters must be in range
     else if (counterType == CounterType.ValueQuantile &&
       (quantilePpm <= 0L || quantilePpm > 1000000L))
       Left(s"counter $id: quantile_ppm must be in (0, 1000000]")
     else if (counterType == CounterType.HeavyHitters && topK < 1)
       Left(s"counter $id: top_k must be >= 1")
-    else if (targetColumn.contains("*") &&
-      Set[CounterType](CounterType.ValueSum, CounterType.ValueMin,
-        CounterType.ValueMax).contains(counterType))
-      Left(s"counter $id: target_column '*' is not allowed for ${counterType.name}")
     else Right(this)
   }
 

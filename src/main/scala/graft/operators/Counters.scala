@@ -3,12 +3,11 @@ package graft.operators
 import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.{Window => SqlWindow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, BooleanType, IntegerType, LongType, StringType}
 
 import graft.config.{CounterDef, CounterType}
-import graft.functions.{Canonical, TargetExpr}
+import graft.functions.{Canonical, CountTables, TargetExpr}
 
 /** The counter pipeline (reference operators O4–O14, O16) as declarative
   * DataFrame transforms:
@@ -149,9 +148,9 @@ object Counters {
 
   /** The types with one aggregate Column, the types a fan-out aggregation
     * carries ([[fanOut]], [[widthAggregate]]). `value_quantile` and
-    * `heavy_hitters` pick or rank per window and have their own shapes.
-    * The two extremes share one record field: the `counter_type` tag
-    * tells them apart.
+    * `heavy_hitters` pick or rank per window over a count table
+    * ([[Tables]]). The two extremes share one record field: the
+    * `counter_type` tag tells them apart.
     */
   private val Summaries: ListMap[CounterType, Summary] = {
     def plain(partial: String, state: String, merge: Column => Column) =
@@ -170,12 +169,15 @@ object Counters {
     */
   def fansOut(c: CounterDef): Boolean = Summaries.contains(c.counterType)
 
-  /** `c`'s [[Summary]]; for the types without one, fails naming `c` and
-    * `otherwise`, which says where those go instead.
+  /** `c`'s [[Summary]], for the intermediate-record codec and its
+    * consumers. A count-table type has no serialized record: its two-phase
+    * path is [[runTwoPhase]] (the `Temporal` record codecs carry other
+    * state shapes, which a counter's partial does not parse into).
     */
-  private[graft] def summary(c: CounterDef, otherwise: => String): Summary =
-    Summaries.getOrElse(c.counterType,
-      throw new IllegalArgumentException(s"counter ${c.id}: $otherwise"))
+  private[graft] def summary(c: CounterDef): Summary =
+    Summaries.getOrElse(c.counterType, throw new IllegalArgumentException(
+      s"counter ${c.id}: ${c.counterType.name} has no serialized intermediate " +
+        "record; run it two-phase through Counters.runTwoPhase"))
 
   /** The per-counter aggregate expression, usable standalone or fanned out
     * (several counters in ONE groupBy pass — see [[fanOut]]).
@@ -260,79 +262,72 @@ object Counters {
     count_distinct(value)
   }
 
-  private def windowed(df: DataFrame, tsCol: String, c: CounterDef, extraKeys: Seq[Column] = Nil) =
-    df.groupBy(window(col(tsCol), c.windowDuration) +: extraKeys: _*)
+  /** `df` grouped by `c`'s window, then `shard` (as `shard_id`), then `keys`. */
+  private def windowed(df: DataFrame, tsCol: String, c: CounterDef,
+                       shard: Option[Column] = None, keys: Seq[Column] = Nil) =
+    df.groupBy(window(col(tsCol), c.windowDuration) +: (shard.map(_.as("shard_id")).toSeq ++
+      keys): _*)
 
-  /** Single-phase counter (O8/O9/O12/O13): the standard path. The two
-    * engine-extension counter types dispatch to their own aggregation
-    * shapes (a single agg Column can't express a quantile pick or a
-    * per-window rank) but share the O13 finalize projection.
+  /** A count-table counter type: its state is a count table,
+    * (window[, shard], key) → n, finished per window by `finish`
+    * (`graft.functions.CountTables`), which reads the count from column
+    * `n` and partitions by its second argument. The key is the target
+    * value through `keyOf`, as column `key`; the two-phase partial is
+    * column `partial`, a sorted array of `{field, n}` structs. `extra`
+    * are the output fields the finished rows carry beside `value`.
     */
-  def run(df: DataFrame, tsCol: String, c: CounterDef,
-          eventSourceArn: Option[String] = None): DataFrame =
-    c.counterType match {
-      case CounterType.ValueQuantile =>
-        finalizeOutput(quantileAgg(df, tsCol, c, Nil), c, eventSourceArn)
-      case CounterType.HeavyHitters =>
-        finalizeOutput(hitterAgg(df, tsCol, c, Nil), c, eventSourceArn,
-          extraFields = Seq(col("member"), col("rank")))
-      case _ =>
-        finalizeOutput(
-          windowed(df, tsCol, c).agg(aggExpr(df, c).as("value")),
-          c, eventSourceArn)
+  private final case class Table(key: String, keyOf: Column => Column, field: String,
+                                 partial: String, n: String, extra: Seq[Column],
+                                 finish: (DataFrame, Seq[Column], CounterDef) => DataFrame)
+
+  /** `value_quantile` picks its value from a value histogram (exact lower
+    * discrete quantile at `c.quantilePpm`: the smallest v with
+    * cum·10⁶ ≥ ppm·total); `heavy_hitters` ranks the members' counts
+    * (top `c.topK`, count desc, member asc as a string), adding `member`
+    * and `rank` beside the count in `value`. Distinct values or members
+    * ≪ rows, so the window step runs over a small table.
+    */
+  private val Tables: Map[CounterType, Table] = Map(
+    CounterType.ValueQuantile -> Table("__v", identity, "v", "partial_hist", "__cnt", Nil,
+      (t, part, c) => CountTables.quantilePick(t, part, c.quantilePpm)),
+    CounterType.HeavyHitters -> Table("member", _.cast("string"), "m", "partial_counts", "value",
+      Seq(col("member"), col("rank")),
+      (t, part, c) => CountTables.topK(t, part, "value", "member", c.topK)))
+
+  /** `c`'s count table per (window[, shard], key), the count as column
+    * `n`; rows with a null target drop here.
+    */
+  private def countTable(df: DataFrame, tsCol: String, c: CounterDef, t: Table,
+                         shard: Option[Column], n: String): DataFrame = {
+    val value = valueColumn(c).getOrElse(throw new IllegalArgumentException(
+      s"counter ${c.id}: ${c.counterType.name} requires a target"))
+    windowed(df.where(value.isNotNull), tsCol, c, shard, Seq(t.keyOf(value).as(t.key)))
+      .agg(count(lit(1)).as(n))
+  }
+
+  /** `c`'s finished rows per window (and `shard`, as `shard_id`): its
+    * aggregate, or its count table's [[Table]] finish.
+    */
+  private def aggregate(df: DataFrame, tsCol: String, c: CounterDef,
+                        shard: Option[Column]): DataFrame =
+    Tables.get(c.counterType) match {
+      case Some(t) => t.finish(countTable(df, tsCol, c, t, shard, t.n),
+        col("window") +: shard.map(_ => col("shard_id")).toSeq, c)
+      case None => windowed(df, tsCol, c, shard).agg(aggExpr(df, c).as("value"))
     }
 
-  /** `value_quantile` single-phase aggregation: exact lower discrete
-    * quantile of the target value at `c.quantilePpm` per (window[,
-    * extras]). Histogram method (the [[graft.textops.TextAnalysis.lengthQuantiles]]
-    * convention): one map-side-combinable groupBy collapses rows to
-    * (window, v, cnt) — distinct values ≪ rows — then cumulative/total
-    * sums run over the histogram, partitioned by window, and the smallest
-    * v with cum·10⁶ ≥ ppm·total wins. All comparisons integer; v itself
-    * passes through untouched, so any orderable value type works.
+  /** The O13 record of finished rows ([[finalizeOutput]]), with the
+    * `member` and `rank` fields of a `heavy_hitters` counter.
     */
-  private def quantileAgg(df: DataFrame, tsCol: String, c: CounterDef,
-                          extraKeys: Seq[(Column, String)]): DataFrame = {
-    val value = valueColumn(c).getOrElse(throw new IllegalArgumentException(
-      s"counter ${c.id}: value_quantile requires a target"))
-    val keyCols = extraKeys.map { case (e, n) => e.as(n) }
-    val hist = df.where(value.isNotNull)
-      .groupBy(window(col(tsCol), c.windowDuration) +: keyCols :+ value.as("__v"): _*)
-      .agg(count(lit(1)).as("__cnt"))
-    val part = col("window") +: extraKeys.map { case (_, n) => col(n) }
-    val wCum = SqlWindow.partitionBy(part: _*).orderBy(col("__v"))
-    val wTot = SqlWindow.partitionBy(part: _*)
-    hist
-      .withColumn("__cum", sum(col("__cnt")).over(wCum))
-      .withColumn("__tot", sum(col("__cnt")).over(wTot))
-      .where(col("__cum") * lit(1000000L) >= lit(c.quantilePpm) * col("__tot"))
-      .groupBy(part: _*)
-      .agg(min(col("__v")).as("value"))
-  }
+  private def finish(agg: DataFrame, c: CounterDef, eventSourceArn: Option[String],
+                     includeShard: Boolean = false): DataFrame =
+    finalizeOutput(agg, c, eventSourceArn, includeShard,
+      Tables.get(c.counterType).fold(Seq.empty[Column])(_.extra))
 
-  /** `heavy_hitters` single-phase aggregation: per-(window[, extras])
-    * top-`c.topK` target members by occurrence count. The rank window runs
-    * over the per-(window, member) aggregate — map-side-combined, bounded
-    * by active members — never over raw rows. Output adds (member, rank)
-    * beside the count in `value`.
-    */
-  private def hitterAgg(df: DataFrame, tsCol: String, c: CounterDef,
-                        extraKeys: Seq[(Column, String)]): DataFrame = {
-    val member = valueColumn(c).getOrElse(throw new IllegalArgumentException(
-      s"counter ${c.id}: heavy_hitters requires a target"))
-    val keyCols = extraKeys.map { case (e, n) => e.as(n) }
-    val counts = df.where(member.isNotNull)
-      .groupBy(window(col(tsCol), c.windowDuration) +: keyCols :+
-        member.cast("string").as("member"): _*)
-      .agg(count(lit(1)).as("value"))
-    val part = col("window") +: extraKeys.map { case (_, n) => col(n) }
-    val w = SqlWindow.partitionBy(part: _*)
-      .orderBy(col("value").desc, col("member").asc)
-    counts
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= c.topK)
-  }
-
+  /** Single-phase counter (O8/O9/O12/O13): the standard path. */
+  def run(df: DataFrame, tsCol: String, c: CounterDef,
+          eventSourceArn: Option[String] = None): DataFrame =
+    finish(aggregate(df, tsCol, c, None), c, eventSourceArn)
 
   /** Exact-distinct variant of [[run]] for oracle checking. */
   def runExactDistinct(df: DataFrame, tsCol: String, c: CounterDef,
@@ -349,24 +344,9 @@ object Counters {
     * shard in the grouping key.
     */
   def runPerShard(df: DataFrame, tsCol: String, shardCol: String, c: CounterDef,
-                  eventSourceArn: Option[String] = None): DataFrame = {
-    val shardKey = col(shardCol).cast("string").as("shard_id")
-    c.counterType match {
-      case CounterType.ValueQuantile =>
-        finalizeOutput(quantileAgg(df, tsCol, c,
-            Seq(col(shardCol).cast("string") -> "shard_id")),
-          c, eventSourceArn, includeShard = true)
-      case CounterType.HeavyHitters =>
-        finalizeOutput(hitterAgg(df, tsCol, c,
-            Seq(col(shardCol).cast("string") -> "shard_id")),
-          c, eventSourceArn, includeShard = true,
-          extraFields = Seq(col("member"), col("rank")))
-      case _ =>
-        finalizeOutput(
-          windowed(df, tsCol, c, Seq(shardKey)).agg(aggExpr(df, c).as("value")),
-          c, eventSourceArn, includeShard = true)
-    }
-  }
+                  eventSourceArn: Option[String] = None): DataFrame =
+    finish(aggregate(df, tsCol, c, Some(col(shardCol).cast("string"))),
+      c, eventSourceArn, includeShard = true)
 
   /** Explicit two-phase topology (O10/O11): per-shard partial aggregate,
     * then cross-shard merge — the reference's aggregate-stream architecture
@@ -381,83 +361,37 @@ object Counters {
     * mergeable bytes, exactly like the reference's `base64_hllpp` state.
     */
   def runTwoPhase(df: DataFrame, tsCol: String, shardCol: String, c: CounterDef,
-                  eventSourceArn: Option[String] = None): DataFrame = {
-    val partial = partialState(df, tsCol, shardCol, c)
-    val extra = c.counterType match {
-      case CounterType.HeavyHitters => Seq(col("member"), col("rank"))
-      case _ => Nil
-    }
-    finalizeOutput(mergePartials(partial, c), c, eventSourceArn, extraFields = extra)
-  }
+                  eventSourceArn: Option[String] = None): DataFrame =
+    finish(mergePartials(partialState(df, tsCol, shardCol, c), c), c, eventSourceArn)
 
   /** Phase 1: per-(window, shard) partial state — the IntermediateRecord
     * (`counter.go:483-491`): [[partialAgg]] in its [[Summary]]'s column,
     * e.g. a partial row count or HLL sketch bytes (mergeable, bounded
-    * size).
+    * size); for a count-table type, its [[Table]]'s sorted `{field, n}`
+    * array.
     */
-  def partialState(df: DataFrame, tsCol: String, shardCol: String, c: CounterDef): DataFrame =
-    c.counterType match {
-      // extension types: the partial is a per-(window, shard) table —
-      // a (value, cnt) histogram / a (member, cnt) count table — both
-      // mergeable by concat + re-sum, like the reference's counter states
-      case CounterType.ValueQuantile =>
-        val value = valueColumn(c).getOrElse(throw new IllegalArgumentException(
-          s"counter ${c.id}: value_quantile requires a target"))
-        df.where(value.isNotNull)
-          .groupBy(window(col(tsCol), c.windowDuration), col(shardCol).as("shard_id"),
-            value.as("__v"))
-          .agg(count(lit(1)).as("__cnt"))
-          .groupBy(col("window"), col("shard_id"))
-          .agg(sort_array(collect_list(struct(col("__v").as("v"), col("__cnt").as("n"))))
-            .as("partial_hist"))
-      case CounterType.HeavyHitters =>
-        val member = valueColumn(c).getOrElse(throw new IllegalArgumentException(
-          s"counter ${c.id}: heavy_hitters requires a target"))
-        df.where(member.isNotNull)
-          .groupBy(window(col(tsCol), c.windowDuration), col(shardCol).as("shard_id"),
-            member.cast("string").as("member"))
-          .agg(count(lit(1)).as("__cnt"))
-          .groupBy(col("window"), col("shard_id"))
-          .agg(sort_array(collect_list(struct(col("member").as("m"), col("__cnt").as("n"))))
-            .as("partial_counts"))
-      case _ =>
-        windowed(df, tsCol, c, Seq(col(shardCol).as("shard_id")))
-          .agg(partialAgg(df, c).as(Summaries(c.counterType).partial))
+  def partialState(df: DataFrame, tsCol: String, shardCol: String, c: CounterDef): DataFrame = {
+    val shard = Some(col(shardCol))
+    Tables.get(c.counterType) match {
+      case Some(t) => CountTables.collectPartials(countTable(df, tsCol, c, t, shard, "__cnt"),
+        Seq(col(t.key).as(t.field), col("__cnt").as("n")), t.partial)
+      case None => windowed(df, tsCol, c, shard)
+        .agg(partialAgg(df, c).as(Summaries(c.counterType).partial))
     }
+  }
 
   /** Phase 2: merge partials across shards (`counter.go:372-403`): the
     * [[Summary]]'s `merge` (count → sum of partial counts; ACD → HLL
-    * union + estimate; …); `value_quantile`/`heavy_hitters` → concat +
-    * re-sum, then the same quantile pick / rank as single-phase (the shard
-    * hop must be invisible).
+    * union + estimate; …); for a count-table type, explode + re-sum, then
+    * the same [[Table]] finish as single-phase (the shard hop must be
+    * invisible).
     */
   def mergePartials(partial: DataFrame, c: CounterDef): DataFrame =
-    c.counterType match {
-      case CounterType.ValueQuantile =>
-        val hist = partial
-          .select(col("window"), explode(col("partial_hist")).as("h"))
-          .groupBy(col("window"), col("h.v").as("__v"))
-          .agg(sum(col("h.n")).as("__cnt"))
-        val wCum = SqlWindow.partitionBy(col("window")).orderBy(col("__v"))
-        val wTot = SqlWindow.partitionBy(col("window"))
-        hist
-          .withColumn("__cum", sum(col("__cnt")).over(wCum))
-          .withColumn("__tot", sum(col("__cnt")).over(wTot))
-          .where(col("__cum") * lit(1000000L) >= lit(c.quantilePpm) * col("__tot"))
-          .groupBy(col("window"))
-          .agg(min(col("__v")).as("value"))
-      case CounterType.HeavyHitters =>
-        val counts = partial
-          .select(col("window"), explode(col("partial_counts")).as("h"))
-          .groupBy(col("window"), col("h.m").as("member"))
-          .agg(sum(col("h.n")).as("value"))
-        val w = SqlWindow.partitionBy(col("window"))
-          .orderBy(col("value").desc, col("member").asc)
-        counts
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .where(col("rank") <= c.topK)
-      case t =>
-        val s = Summaries(t)
+    Tables.get(c.counterType) match {
+      case Some(t) => t.finish(CountTables.resumPartials(partial, t.partial,
+        Seq(col("window"), col(s"h.${t.field}").as(t.key)), t.n), Seq(col("window")), c)
+      case None =>
+        val s = Summaries(c.counterType)
         partial.groupBy(col("window")).agg(s.merge(col(s.partial)).as("value"))
     }
 

@@ -48,22 +48,31 @@ object Intermediate {
   def toRecords(partial: DataFrame, c: CounterDef,
                 eventSourceArn: String,
                 counterVersion: String = ConfigLoader.EngineVersion): DataFrame = {
-    val s = Counters.summary(c, "serialized intermediate records for " +
-      s"${c.counterType.name} use Intermediate.toQuantileRecords/toHitterRecords")
+    val s = Counters.summary(c)
+    envelope(partial, c.id, c.counterType.name, eventSourceArn, counterVersion,
+      s.state, s.encode(col(s.partial)))
+  }
+
+  /** The one record envelope (`counter.go:483-512`): `partial`'s rows as
+    * intermediate-record JSON, tagged `counterId`/`counterType`, with
+    * `state` as the `counter_state` union member `field`.
+    */
+  private def envelope(partial: DataFrame, counterId: String, counterType: String,
+                       eventSourceArn: String, counterVersion: String,
+                       field: String, state: Column): DataFrame =
     partial.select(
-      lit(c.id).as("partition_key"),
+      lit(counterId).as("partition_key"),
       to_json(struct(
         lit(eventSourceArn).as("event_source_arn"),
         col("shard_id").cast("string").as("shard_id"),
-        lit(c.id).as("counter_id"),
-        lit(c.counterType.name).as("counter_type"),
+        lit(counterId).as("counter_id"),
+        lit(counterType).as("counter_type"),
         lit(counterVersion).as("counter_version"),
         struct(
           date_format(col("window.start"), "yyyy-MM-dd'T'HH:mm:ssXXX").as("start"),
           date_format(col("window.end"), "yyyy-MM-dd'T'HH:mm:ssXXX").as("end")
         ).as("window"),
-        struct(s.encode(col(s.partial)).as(s.state)).as("counter_state"))).as("value"))
-  }
+        struct(state.as(field)).as("counter_state"))).as("value"))
 
   private val recordSchema: StructType = StructType(Seq(
     StructField("event_source_arn", StringType),
@@ -75,9 +84,11 @@ object Intermediate {
       StructField("start", TimestampType),
       StructField("end", TimestampType)))),
     // counter_state is the reference's tagged union {row_count} |
-    // {base64_hllpp} (counter.go:78-82) plus the engine-extension
-    // {histogram} member for the percentile counter type — from_json
-    // leaves absent members null, which is exactly the union's tag
+    // {base64_hllpp} (counter.go:78-82) plus the engine-extension members
+    // {sum_cents}, {extreme_cents} (value_sum, value_min/value_max),
+    // {histogram}, {counts} and {cells} (the Temporal percentile, hitter
+    // and CMS counters) — from_json leaves absent members null, which is
+    // exactly the union's tag
     StructField("counter_state", StructType(Seq(
       StructField("row_count", LongType),
       StructField("base64_hll", StringType),
@@ -167,22 +178,30 @@ object Intermediate {
     */
   def parse(records: DataFrame, c: CounterDef,
             requiredVersion: Option[String] = None): DataFrame = {
-    val s = Counters.summary(c, "serialized intermediate records for " +
-      s"${c.counterType.name} parse via Intermediate.parseQuantiles/parseHitters")
-    val versionOk: Column = requiredVersion.map(VersionConstraint(_)) match {
-      case None => lit(true)
-      case Some(vc) => versionCheck(vc, col("r.counter_version"))
-    }
+    val s = Counters.summary(c)
+    fromRecords(records, c.id, c.counterType.name, requiredVersion,
+      s.decode(col(s"r.counter_state.${s.state}")).as(s.partial))
+  }
+
+  /** The one record parser: `records`' JSON addressed to `counterId` and
+    * tagged `counterType` whose version passes `requiredVersion`, as
+    * (window, shard_id, `state`), an expression over the parsed record
+    * `r`.
+    */
+  private def fromRecords(records: DataFrame, counterId: String, counterType: String,
+                          requiredVersion: Option[String], state: Column): DataFrame = {
+    val versionOk = requiredVersion.map(VersionConstraint(_))
+      .fold(lit(true))(vc => versionCheck(vc, col("r.counter_version")))
     records
       .select(from_json(col("value"), recordSchema).as("r"))
       .where(col("r").isNotNull &&
-        col("r.counter_id") === c.id &&
-        col("r.counter_type") === c.counterType.name &&
+        col("r.counter_id") === counterId &&
+        col("r.counter_type") === counterType &&
         versionOk)
       .select(
         struct(col("r.window.start").as("start"), col("r.window.end").as("end")).as("window"),
         col("r.shard_id"),
-        s.decode(col(s"r.counter_state.${s.state}")).as(s.partial))
+        state)
   }
 
   /** The full aggregate-stream consumer (`counter.go:348-412`): parse +
@@ -212,19 +231,8 @@ object Intermediate {
   def toQuantileRecords(partial: DataFrame, counterId: String,
                         eventSourceArn: String,
                         counterVersion: String = ConfigLoader.EngineVersion): DataFrame =
-    partial.select(
-      lit(counterId).as("partition_key"),
-      to_json(struct(
-        lit(eventSourceArn).as("event_source_arn"),
-        col("shard_id").cast("string").as("shard_id"),
-        lit(counterId).as("counter_id"),
-        lit(QuantilesTypeName).as("counter_type"),
-        lit(counterVersion).as("counter_version"),
-        struct(
-          date_format(col("window.start"), "yyyy-MM-dd'T'HH:mm:ssXXX").as("start"),
-          date_format(col("window.end"), "yyyy-MM-dd'T'HH:mm:ssXXX").as("end")
-        ).as("window"),
-        struct(col("partial_hist").as("histogram")).as("counter_state"))).as("value"))
+    envelope(partial, counterId, QuantilesTypeName, eventSourceArn, counterVersion,
+      "histogram", col("partial_hist"))
 
   /** [[parse]] for quantile records: same warn-and-skip filtering
     * (id + type tag + version gate), state lands back as `partial_hist`.
@@ -233,22 +241,9 @@ object Intermediate {
     * tag convention applied one level down.
     */
   def parseQuantiles(records: DataFrame, counterId: String,
-                     requiredVersion: Option[String] = None): DataFrame = {
-    val versionOk: Column = requiredVersion.map(VersionConstraint(_)) match {
-      case None => lit(true)
-      case Some(vc) => versionCheck(vc, col("r.counter_version"))
-    }
-    records
-      .select(from_json(col("value"), recordSchema).as("r"))
-      .where(col("r").isNotNull &&
-        col("r.counter_id") === counterId &&
-        col("r.counter_type") === QuantilesTypeName &&
-        versionOk)
-      .select(
-        struct(col("r.window.start").as("start"), col("r.window.end").as("end")).as("window"),
-        col("r.shard_id"),
-        col("r.counter_state.histogram").as("partial_hist"))
-  }
+                     requiredVersion: Option[String] = None): DataFrame =
+    fromRecords(records, counterId, QuantilesTypeName, requiredVersion,
+      col("r.counter_state.histogram").as("partial_hist"))
 
   /** Full consumer for the quantile counter — parse + filter + merge +
     * quantile pick, the [[mergeRecords]] twin.
@@ -275,40 +270,16 @@ object Intermediate {
   def toHitterRecords(partial: DataFrame, counterId: String,
                       eventSourceArn: String,
                       counterVersion: String = ConfigLoader.EngineVersion): DataFrame =
-    partial.select(
-      lit(counterId).as("partition_key"),
-      to_json(struct(
-        lit(eventSourceArn).as("event_source_arn"),
-        col("shard_id").cast("string").as("shard_id"),
-        lit(counterId).as("counter_id"),
-        lit(HittersTypeName).as("counter_type"),
-        lit(counterVersion).as("counter_version"),
-        struct(
-          date_format(col("window.start"), "yyyy-MM-dd'T'HH:mm:ssXXX").as("start"),
-          date_format(col("window.end"), "yyyy-MM-dd'T'HH:mm:ssXXX").as("end")
-        ).as("window"),
-        struct(col("partial_counts").as("counts")).as("counter_state"))).as("value"))
+    envelope(partial, counterId, HittersTypeName, eventSourceArn, counterVersion,
+      "counts", col("partial_counts"))
 
   /** [[parse]] for heavy-hitter records: the same warn-and-skip filtering
     * (id + type tag + version gate); state lands back as `partial_counts`.
     */
   def parseHitters(records: DataFrame, counterId: String,
-                   requiredVersion: Option[String] = None): DataFrame = {
-    val versionOk: Column = requiredVersion.map(VersionConstraint(_)) match {
-      case None => lit(true)
-      case Some(vc) => versionCheck(vc, col("r.counter_version"))
-    }
-    records
-      .select(from_json(col("value"), recordSchema).as("r"))
-      .where(col("r").isNotNull &&
-        col("r.counter_id") === counterId &&
-        col("r.counter_type") === HittersTypeName &&
-        versionOk)
-      .select(
-        struct(col("r.window.start").as("start"), col("r.window.end").as("end")).as("window"),
-        col("r.shard_id"),
-        col("r.counter_state.counts").as("partial_counts"))
-  }
+                   requiredVersion: Option[String] = None): DataFrame =
+    fromRecords(records, counterId, HittersTypeName, requiredVersion,
+      col("r.counter_state.counts").as("partial_counts"))
 
   /** Full consumer for the heavy-hitter counter — parse + filter + merge +
     * rank, the [[mergeRecords]] twin. Output matches
@@ -336,40 +307,16 @@ object Intermediate {
   def toCmsRecords(partial: DataFrame, counterId: String,
                    eventSourceArn: String,
                    counterVersion: String = ConfigLoader.EngineVersion): DataFrame =
-    partial.select(
-      lit(counterId).as("partition_key"),
-      to_json(struct(
-        lit(eventSourceArn).as("event_source_arn"),
-        col("shard_id").cast("string").as("shard_id"),
-        lit(counterId).as("counter_id"),
-        lit(CmsTypeName).as("counter_type"),
-        lit(counterVersion).as("counter_version"),
-        struct(
-          date_format(col("window.start"), "yyyy-MM-dd'T'HH:mm:ssXXX").as("start"),
-          date_format(col("window.end"), "yyyy-MM-dd'T'HH:mm:ssXXX").as("end")
-        ).as("window"),
-        struct(col("partial_cells").as("cells")).as("counter_state"))).as("value"))
+    envelope(partial, counterId, CmsTypeName, eventSourceArn, counterVersion,
+      "cells", col("partial_cells"))
 
   /** [[parse]] for CMS records: the same warn-and-skip filtering
     * (id + type tag + version gate); state lands back as `partial_cells`.
     */
   def parseCms(records: DataFrame, counterId: String,
-               requiredVersion: Option[String] = None): DataFrame = {
-    val versionOk: Column = requiredVersion.map(VersionConstraint(_)) match {
-      case None => lit(true)
-      case Some(vc) => versionCheck(vc, col("r.counter_version"))
-    }
-    records
-      .select(from_json(col("value"), recordSchema).as("r"))
-      .where(col("r").isNotNull &&
-        col("r.counter_id") === counterId &&
-        col("r.counter_type") === CmsTypeName &&
-        versionOk)
-      .select(
-        struct(col("r.window.start").as("start"), col("r.window.end").as("end")).as("window"),
-        col("r.shard_id"),
-        col("r.counter_state.cells").as("partial_cells"))
-  }
+               requiredVersion: Option[String] = None): DataFrame =
+    fromRecords(records, counterId, CmsTypeName, requiredVersion,
+      col("r.counter_state.cells").as("partial_cells"))
 
   /** Full consumer for the CMS counter — parse + filter + cell-wise
     * merge, the [[mergeRecords]] twin. Output matches

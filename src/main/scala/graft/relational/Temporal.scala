@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{FreqSketch, Quantiles, QuantileSketch}
+import graft.functions.{CountTables, FreqSketch, Quantiles, QuantileSketch}
 
 /** Temporal / event-sequence analytics over the `events` table — the
   * operator family a training-data pipeline needs for event attribution,
@@ -318,13 +318,6 @@ object Temporal {
         col("s.ranks").as("ranks"), col("s.n").as("n"))
   }
 
-  /** The gate half of [[quantileSketchGate]], over ANY summary source
-    * with the (window_start, knots, ranks, n) shape — the batch typed
-    * aggregation or the streaming state emission. Windows present in
-    * `summaries` drive the output (inner joins): the streaming face
-    * passes only watermark-closed windows and gets the e13 rows
-    * restricted to exactly those.
-    */
   /** The events-derived half of [[quantileGateFromSummaries]] — exposed so
     * the STREAMING entry can materialize it concurrently with the stream
     * drain (opt guide §2.6, r13): the two are independent until the final
@@ -335,6 +328,13 @@ object Temporal {
                             windowDuration: String = "1 hour"): DataFrame =
     dropNullCents(valueCentsHistogram(events, "ts", windowDuration))
 
+  /** The gate half of [[quantileSketchGate]], over ANY summary source
+    * with the (window_start, knots, ranks, n) shape — the batch typed
+    * aggregation or the streaming state emission. Windows present in
+    * `summaries` drive the output (inner joins): the streaming face
+    * passes only watermark-closed windows and gets the e13 rows
+    * restricted to exactly those.
+    */
   def quantileGateFromSummaries(events: DataFrame, summaries: DataFrame,
                                 windowDuration: String = "1 hour",
                                 psPpm: Seq[Long] = Seq(500000L, 900000L, 990000L),
@@ -479,23 +479,25 @@ object Temporal {
     */
   def partialQuantileState(events: DataFrame, tsCol: String, shardCol: String,
                            windowDuration: String = "1 hour"): DataFrame =
-    events
+    CountTables.collectPartials(pinned(events
       .groupBy(window(col(tsCol), windowDuration),
         col(shardCol).cast("string").as("shard_id"),
         floor(col("value") * 100).cast("long").as("value_cents"))
-      .agg(count(lit(1)).as("cnt"))
-      // pin the per-(window, shard) assembly parallelism (r13, §2.5 — the
-      // d31 class): the cents-count frame is a few hundred KB, so AQE
-      // coalesces the second agg's exchange to ONE partition and the
-      // histogram collect + the record JSON encode/parse fused above it
-      // all serialize (measured 0.5 s single-task on e10). Repartitioning
-      // on exactly the group keys is reused by the aggregate (no second
-      // exchange) and, being user-specified, AQE keeps its width.
-      .repartition(events.sparkSession.sparkContext.defaultParallelism,
-        col("window"), col("shard_id"))
-      .groupBy(col("window"), col("shard_id"))
-      .agg(sort_array(collect_list(
-        struct(col("value_cents").as("c"), col("cnt").as("n")))).as("partial_hist"))
+      .agg(count(lit(1)).as("cnt"))),
+      Seq(col("value_cents").as("c"), col("cnt").as("n")), "partial_hist")
+
+  /** A per-(window, shard) count table repartitioned on exactly those
+    * keys, which pins the parallelism of the partial states' collect
+    * (r13, §2.5 — the d31 class): the count frame is a few hundred KB,
+    * so AQE would coalesce the collect's exchange to ONE partition, and
+    * the collect plus the record JSON encode/parse fused above it would
+    * all serialize (measured 0.5 s single-task on e10). The collect
+    * reuses this partitioning (no second exchange) and, being
+    * user-specified, AQE keeps its width.
+    */
+  private def pinned(counts: DataFrame): DataFrame =
+    counts.repartition(counts.sparkSession.sparkContext.defaultParallelism,
+      col("window"), col("shard_id"))
 
   /** Phase-2 cross-shard merge (`counter.go:372-403` analog): histograms
     * concatenate and re-sum per (window, cents) — associative and
@@ -505,10 +507,8 @@ object Temporal {
     */
   def mergeQuantilePartials(partial: DataFrame,
                             psPpm: Seq[Long] = Seq(500000L, 900000L, 990000L)): DataFrame = {
-    val hist = partial
-      .select(col("window"), explode(col("partial_hist")).as("h"))
-      .groupBy(col("window"), col("h.c").as("value_cents"))
-      .agg(sum(col("h.n")).as("cnt"))
+    val hist = CountTables.resumPartials(partial, "partial_hist",
+        Seq(col("window"), col("h.c").as("value_cents")), "cnt")
       .select(unix_millis(col("window.start")).as("window_start"),
         col("value_cents"), col("cnt"))
     graft.functions.Quantiles.fromHistogram(dropNullCents(hist),
@@ -529,18 +529,12 @@ object Temporal {
     */
   def partialHitterState(events: DataFrame, tsCol: String, shardCol: String,
                          windowDuration: String = "1 hour"): DataFrame =
-    events
+    CountTables.collectPartials(pinned(events
       .groupBy(window(col(tsCol), windowDuration),
         col(shardCol).cast("string").as("shard_id"),
         col("user_id"))
-      .agg(count(lit(1)).as("cnt"))
-      // pin the per-(window, shard) assembly parallelism — see
-      // partialQuantileState (r13, §2.5)
-      .repartition(events.sparkSession.sparkContext.defaultParallelism,
-        col("window"), col("shard_id"))
-      .groupBy(col("window"), col("shard_id"))
-      .agg(sort_array(collect_list(
-        struct(col("user_id").as("u"), col("cnt").as("n")))).as("partial_counts"))
+      .agg(count(lit(1)).as("cnt"))),
+      Seq(col("user_id").as("u"), col("cnt").as("n")), "partial_counts")
 
   /** Phase-2 cross-shard merge for the heavy-hitter counter: per-shard
     * user tables concatenate and re-sum per (window, user) — associative
@@ -548,19 +542,18 @@ object Temporal {
     * aggregate exactly as in [[windowHeavyHitters]], whose output shape
     * this matches (the shard hop must be invisible).
     */
-  def mergeHitterPartials(partial: DataFrame, k: Int = 3): DataFrame = {
-    val counts = partial
-      .select(col("window"), explode(col("partial_counts")).as("h"))
-      .groupBy(col("window"), col("h.u").as("user_id"))
-      .agg(sum(col("h.n")).as("n_events"))
-    val rankW = Window.partitionBy(col("window"))
-      .orderBy(col("n_events").desc, col("user_id").asc)
-    counts
-      .withColumn("rank", row_number().over(rankW).cast("long"))
-      .where(col("rank") <= k)
-      .select(unix_millis(col("window.start")).as("window_start"),
+  def mergeHitterPartials(partial: DataFrame, k: Int = 3): DataFrame =
+    topUsers(CountTables.resumPartials(partial, "partial_counts",
+      Seq(col("window"), col("h.u").as("user_id")), "n_events"), "window", k)
+
+  /** The top `k` users of a (window column `w`, user_id, n_events) count
+    * table per window, count desc then user asc (numeric order), as
+    * (window_start, user_id, n_events, rank).
+    */
+  private def topUsers(counts: DataFrame, w: String, k: Int): DataFrame =
+    CountTables.topK(counts, Seq(col(w)), "n_events", "user_id", k)
+      .select(unix_millis(col(s"$w.start")).as("window_start"),
         col("user_id"), col("n_events"), col("rank"))
-  }
 
   /** Phase-1 partial state for the COUNT–MIN SKETCH counter through the
     * reference's two-phase topology (`counter.go:483-512` analog, the
@@ -578,7 +571,7 @@ object Temporal {
   def partialCmsState(events: DataFrame, tsCol: String, shardCol: String,
                       windowDuration: String = "1 hour",
                       depth: Int = 3, width: Int = 64): DataFrame =
-    events
+    CountTables.collectPartials(pinned(events
       .select(window(col(tsCol), windowDuration).as("window"),
         col(shardCol).cast("string").as("shard_id"),
         col("user_id").cast("string").as("__key"))
@@ -590,14 +583,8 @@ object Temporal {
           concat(lit("cms"), col("j").cast("string"), lit(":"), col("__key"))),
           lit(width.toLong)).as("b"))
       .groupBy(col("window"), col("shard_id"), col("j"), col("b"))
-      .agg(count(lit(1)).as("n"))
-      // pin the per-(window, shard) assembly parallelism — see
-      // partialQuantileState (r13, §2.5)
-      .repartition(events.sparkSession.sparkContext.defaultParallelism,
-        col("window"), col("shard_id"))
-      .groupBy(col("window"), col("shard_id"))
-      .agg(sort_array(collect_list(struct(col("j").cast("long").as("j"),
-        col("b"), col("n")))).as("partial_cells"))
+      .agg(count(lit(1)).as("n"))),
+      Seq(col("j").cast("long").as("j"), col("b"), col("n")), "partial_cells")
 
   /** Phase-2 cross-shard merge for the CMS counter: cells concatenate
     * and re-sum per (window, j, bucket) — sketch linearity — yielding
@@ -606,11 +593,9 @@ object Temporal {
     * hop is invisible in the e24 gate output.
     */
   def mergeCmsPartials(partial: DataFrame): DataFrame =
-    partial
-      .select(col("window"), explode(col("partial_cells")).as("h"))
-      .groupBy(unix_millis(col("window.start")).as("window_start"),
-        col("h.j").as("j"), col("h.b").as("bucket"))
-      .agg(sum(col("h.n")).as("cnt"))
+    CountTables.resumPartials(partial, "partial_cells",
+      Seq(unix_millis(col("window.start")).as("window_start"),
+        col("h.j").as("j"), col("h.b").as("bucket")), "cnt")
 
   /** Windowed heavy hitters (the leaderboard step on counter output): per
     * tumbling window, the top-`k` users by event count with their rank
@@ -625,18 +610,10 @@ object Temporal {
     * aggregate itself is the bottleneck, not the rank.)
     */
   def windowHeavyHitters(events: DataFrame, windowDuration: String = "1 hour",
-                         k: Int = 3): DataFrame = {
-    val counts = events
+                         k: Int = 3): DataFrame =
+    topUsers(events
       .groupBy(window(col("ts"), windowDuration).as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-    val rankW = Window.partitionBy(col("w"))
-      .orderBy(col("n_events").desc, col("user_id").asc)
-    counts
-      .withColumn("rank", row_number().over(rankW).cast("long"))
-      .where(col("rank") <= k)
-      .select(unix_millis(col("w.start")).as("window_start"),
-        col("user_id"), col("n_events"), col("rank"))
-  }
+      .agg(count(lit(1)).as("n_events")), "w", k)
 
   /** Count–min sketch counters (Cormode & Muthukrishnan 2005, "An
     * improved data stream summary: the count-min sketch and its

@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateT
 import org.apache.spark.sql.types.StructType
 
 import graft.config.{CounterDef, CounterType}
+import graft.functions.CountTables
 import graft.operators.{Counters, Intermediate}
 import graft.sources.Deaggregate
 
@@ -463,15 +464,9 @@ object StreamingCounters {
     * [[graft.relational.Temporal.windowHeavyHitters]]'s rows for every
     * closed window.
     */
-  def hittersOfClosedWindows(batch: DataFrame, k: Int = 3): DataFrame = {
-    val rankW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("window_start"))
-      .orderBy(col("n_events").desc, col("user_id").asc)
-    batch
-      .withColumn("rank", row_number().over(rankW).cast("long"))
-      .where(col("rank") <= k)
+  def hittersOfClosedWindows(batch: DataFrame, k: Int = 3): DataFrame =
+    CountTables.topK(batch, Seq(col("window_start")), "n_events", "user_id", k)
       .select(col("window_start"), col("user_id"), col("n_events"), col("rank"))
-  }
 
   /** CONFIG-surface streaming face of a `value_quantile` COUNTER (the
     * generic twin of [[valueQuantileHistogram]], which is hardwired to
@@ -498,21 +493,12 @@ object StreamingCounters {
     * inside `foreachBatch`. Emits the counter's O13 record, identical to
     * `Counters.run(c)`'s row for every closed window.
     */
-  def counterQuantileOfClosedWindows(batch: DataFrame, c: CounterDef): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-    val part = Seq(col("window_start"), col("window_end"))
-    val wCum = w.partitionBy(part: _*).orderBy(col("__v"))
-    val wTot = w.partitionBy(part: _*)
-    batch.where(col("__v").isNotNull)
-      .withColumn("__cum", sum(col("__cnt")).over(wCum))
-      .withColumn("__tot", sum(col("__cnt")).over(wTot))
-      .where(col("__cum") * lit(1000000L) >= lit(c.quantilePpm) * col("__tot"))
-      .groupBy(part: _*)
-      .agg(min(col("__v")).as("value"))
+  def counterQuantileOfClosedWindows(batch: DataFrame, c: CounterDef): DataFrame =
+    CountTables.quantilePick(batch.where(col("__v").isNotNull),
+        Seq(col("window_start"), col("window_end")), c.quantilePpm)
       .select(col("window_start"), col("window_end"),
         lit(c.id).as("counter_id"), lit(c.counterType.name).as("counter_type"),
         col("value"))
-  }
 
   /** CONFIG-surface streaming face of a `heavy_hitters` COUNTER (generic
     * twin of [[hitterCounts]]): per-(window, member) counts as the
@@ -535,17 +521,12 @@ object StreamingCounters {
     * the counter's O13 record with (member, rank), identical to
     * `Counters.run(c)`'s rows for every closed window.
     */
-  def counterHittersOfClosedWindows(batch: DataFrame, c: CounterDef): DataFrame = {
-    val rankW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("window_start"), col("window_end"))
-      .orderBy(col("__cnt").desc, col("member").asc)
-    batch.where(col("member").isNotNull)
-      .withColumn("rank", row_number().over(rankW).cast("long"))
-      .where(col("rank") <= c.topK)
+  def counterHittersOfClosedWindows(batch: DataFrame, c: CounterDef): DataFrame =
+    CountTables.topK(batch.where(col("member").isNotNull),
+        Seq(col("window_start"), col("window_end")), "__cnt", "member", c.topK)
       .select(col("window_start"), col("window_end"),
         lit(c.id).as("counter_id"), lit(c.counterType.name).as("counter_type"),
         col("member"), col("rank"), col("__cnt").as("value"))
-  }
 
   /** Streaming session windows (ENGINE EXTENSION, batch parity with
     * [[Counters.runSessions]]): consecutive records of one key merge into
@@ -851,9 +832,7 @@ object StreamingCounters {
                         watermarkDelay: String = "10 seconds",
                         requiredVersion: Option[String] = None,
                         eventSourceArn: Option[String] = None): DataFrame = {
-    val summary = Counters.summary(c, "the streaming intermediate consumer merges " +
-      "count/ACD/sum/min/max states; quantile/hitter records merge via " +
-      "Intermediate.mergeQuantileRecords/mergeHitterRecords")
+    val summary = Counters.summary(c)
     val parsed = Intermediate.parse(records, c, requiredVersion)
       .withColumn("__ws", col("window.start"))
       .drop("window")

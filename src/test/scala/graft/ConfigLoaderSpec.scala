@@ -127,6 +127,22 @@ class ConfigLoaderSpec extends AnyFunSuite {
         |""".stripMargin).isLeft)
   }
 
+  test("target_column '*' is a count: every other type is rejected by one rule") {
+    def load(t: CounterType) = ConfigLoader.fromYaml(
+      s"""counters:
+         |  - id: star
+         |    target_column: "*"
+         |    counter_type: ${t.name}
+         |""".stripMargin)
+    assert(CounterType.values.size == 7)
+    for (t <- CounterType.values) {
+      if (t == CounterType.Count)
+        assert(load(t).map(_.counters.map(_.counterType)) == Right(Seq(CounterType.Count)))
+      else
+        assert(load(t) == Left(s"counter star: target_column '*' is not allowed for ${t.name}"))
+    }
+  }
+
   test("required_version gate (config.go:54-61,122-138)") {
     def withVersion(rv: String): Either[String, AppConfig] =
       ConfigLoader.fromYaml(

@@ -231,6 +231,30 @@ class CountersSpec extends SparkTestBase {
       out.sortBy(_.getAs[Long]("rank")).toSeq, "the shard hop must be invisible")
   }
 
+  test("count-table counters have no intermediate record: each entry point says runTwoPhase") {
+    import graft.operators.Intermediate
+    import graft.streaming.StreamingCounters
+    // a counter's partial is {v, n} / {m: string, n}; the Temporal codecs
+    // carry {c, n} / {u: long, n}, so pointing a user at them loses the key
+    val arn = "arn:aws:kinesis:us-east-1:000000000000:stream/agg"
+    val count = CounterDef("n", CounterType.Count, Some("*"), windowDuration = "1 minute")
+    val partial = Counters.partialState(synth, "ts", "shard", count)
+    val records = Intermediate.toRecords(partial, count, arn)
+    val entryPoints: Seq[(String, CounterDef => Any)] = Seq(
+      "Intermediate.toRecords" -> (c => Intermediate.toRecords(partial, c, arn)),
+      "Intermediate.parse" -> (c => Intermediate.parse(records, c)),
+      "StreamingCounters.mergeIntermediate" ->
+        (c => StreamingCounters.mergeIntermediate(records, c)))
+    val temporalCodec = "(to|parse|merge)(Quantile|Hitter|Cms)".r
+    for ((name, entry) <- entryPoints;
+         c <- Seq(CounterDef("q", CounterType.ValueQuantile, Some("user_id")),
+           CounterDef("h", CounterType.HeavyHitters, Some("user_id")))) {
+      val msg = intercept[IllegalArgumentException](entry(c)).getMessage
+      assert(msg.contains("Counters.runTwoPhase"), s"$name, ${c.counterType.name}: $msg")
+      assert(temporalCodec.findFirstIn(msg).isEmpty, s"$name, ${c.counterType.name}: $msg")
+    }
+  }
+
   test("value_quantile property: pick equals the sorted-array definition") {
     // random multisets and ppms: the windowed pick must equal the lower
     // discrete quantile "smallest v with |{x <= v}|*1e6 >= ppm*n"

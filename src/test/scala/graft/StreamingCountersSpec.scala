@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.config.{CounterDef, CounterType}
+import graft.operators.Counters
 import graft.streaming.StreamingCounters
 
 /** Structured Streaming execution of the counter pipeline (SURVEY.md
@@ -59,27 +60,50 @@ class StreamingCountersSpec extends SparkTestBase {
   test("config-surface streaming faces: O13 records for closed windows, null-safe") {
     import graft.config.{CounterDef, CounterType}
     implicit val sc = spark.sqlContext
-    val c = CounterDef("p50c", CounterType.ValueQuantile, Some("v"),
-      windowDuration = "1 minute", quantilePpm = 500000L)
-    val input = MemoryStream[(Timestamp, Option[Double])]
-    val hist = StreamingCounters.counterHistogram(
-      input.toDF().toDF("ts", "v"), "ts", c, watermarkDelay = "5 seconds")
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Double)]
-    val query = hist.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        got ++= StreamingCounters.counterQuantileOfClosedWindows(batch, c)
-          .collect().map(r => (r.getLong(0), r.getString(2), r.getString(3), r.getDouble(4)))
-        ()
-      }.start()
-    try {
-      input.addData((ts(1), Some(1.5)), (ts(2), Some(2.5)), (ts(3), Some(3.5)))
-      query.processAllAvailable()
-      assert(got.isEmpty, "window still open")
-      // value-less heartbeat advances the watermark past the window
-      input.addData((ts(70), None))
-      query.processAllAvailable()
-      assert(got.toSeq == Seq((base, "p50c", "value_quantile", 2.5)), s"$got")
-    } finally query.stop()
+    // window [0s, 60s): 1.5, 2.5, 3.5; window [60s, 120s): ten values with
+    // a null among them; a value-less heartbeat at 130s closes both
+    val first: Seq[(Timestamp, Option[Double])] =
+      Seq((ts(1), Some(1.5)), (ts(2), Some(2.5)), (ts(3), Some(3.5)))
+    val second: Seq[(Timestamp, Option[Double])] =
+      Seq(7.5, 0.5, 9.5, 4.5, 2.5, 8.5, 1.5, 6.5, 3.5, 5.5).zipWithIndex
+        .map { case (v, i) => (ts(61 + i), Option(v)) } :+ ((ts(75), None))
+    val heartbeat: Seq[(Timestamp, Option[Double])] = Seq((ts(130), None))
+    for (ppm <- Seq(10000L, 500000L, 900000L, 1000000L)) {
+      val c = CounterDef("pc", CounterType.ValueQuantile, Some("v"),
+        windowDuration = "1 minute", quantilePpm = ppm)
+      val input = MemoryStream[(Timestamp, Option[Double])]
+      val hist = StreamingCounters.counterHistogram(
+        input.toDF().toDF("ts", "v"), "ts", c, watermarkDelay = "5 seconds")
+      val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String, String, Double)]
+      val query = hist.writeStream.outputMode("append")
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          got ++= StreamingCounters.counterQuantileOfClosedWindows(batch, c)
+            .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3),
+              r.getDouble(4)))
+          ()
+        }.start()
+      try {
+        input.addData(first: _*)
+        query.processAllAvailable()
+        assert(got.isEmpty, s"ppm $ppm: window still open")
+        input.addData(second: _*)
+        query.processAllAvailable()
+        // value-less heartbeat advances the watermark past both windows
+        input.addData(heartbeat: _*)
+        query.processAllAvailable()
+        if (ppm == 500000L)
+          assert(got.find(_._1 == base).map(r => (r._3, r._4, r._5)) ==
+            Some(("pc", "value_quantile", 2.5)), s"$got")
+        // the batch counter over the same rows: its windows are exactly
+        // the closed ones (the heartbeat's window has no values)
+        val batchRows = Counters.run((first ++ second ++ heartbeat).toDF("ts", "v"), "ts", c)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3),
+            r.getDouble(4)))
+        assert(batchRows.length == 2)
+        assert(got.sortBy(_._1).toSeq == batchRows.sortBy(_._1).toSeq,
+          s"ppm $ppm: stream $got vs batch ${batchRows.toSeq}")
+      } finally query.stop()
+    }
   }
 
   test("heavy-hitter counter streams: closed windows rank exactly once, matching batch") {
@@ -114,6 +138,65 @@ class StreamingCountersSpec extends SparkTestBase {
         .filter(_._1 == base).toSet
       assert(w.toSet == batchRows, "stream ≡ batch for the closed window")
     } finally query.stop()
+  }
+
+  test("every ranking face breaks a 9/10 tie: counters by string, Temporal by number") {
+    import graft.operators.Intermediate
+    import graft.relational.Temporal
+    implicit val sc = spark.sqlContext
+    // window [0s, 60s): users 9 and 10 four rows each, user 3 one row;
+    // each shard holds two rows of 9 and two of 10, so every (window,
+    // shard) ties them too
+    val rows = (Seq.fill(4)(9L) ++ Seq.fill(4)(10L) :+ 3L).zipWithIndex
+      .map { case (u, i) => (ts(1 + i), u, (i % 2).toLong) }
+    val df = rows.toDF("ts", "user_id", "shard")
+    val c = CounterDef("tie", CounterType.HeavyHitters, Some("user_id"),
+      windowDuration = "1 minute", topK = 2)
+    def members(out: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
+      out.collect().map(r => (r.getAs[String]("member"), r.getAs[Long]("rank")))
+        .sortBy(_.swap).toSeq
+    def users(out: Iterable[org.apache.spark.sql.Row]): Seq[(Long, Long)] =
+      out.map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("rank"))).toSeq.sortBy(_.swap)
+    val byString = Seq(("10", 1L), ("9", 2L))
+    val byNumber = Seq((9L, 1L), (10L, 2L))
+    /** `face`'s rows of the closed first window of `rows` streamed
+      * through `table`, closed by a later heartbeat row. */
+    def streamed(table: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+                 face: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
+      val input = MemoryStream[(Timestamp, Long)]
+      val got = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+      val query = table(input.toDF().toDF("ts", "user_id")).writeStream.outputMode("append")
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          got ++= face(batch).collect(); ()
+        }.start()
+      try {
+        input.addData(rows.map(r => (r._1, r._2)): _*)
+        query.processAllAvailable()
+        input.addData((ts(130), 99L))
+        query.processAllAvailable()
+      } finally query.stop()
+      got.filter(_.getAs[Long]("window_start") == base).toSeq
+    }
+
+    assert(members(Counters.run(df, "ts", c)) == byString)
+    assert(members(Counters.runTwoPhase(df, "ts", "shard", c)) == byString)
+    val perShard = Counters.runPerShard(df, "ts", "shard", c)
+    for (shard <- Seq("0", "1"))
+      assert(members(perShard.where(col("shard_id") === shard)) == byString, s"shard $shard")
+    val counterStream = streamed(
+      StreamingCounters.counterMemberCounts(_, "ts", c, watermarkDelay = "5 seconds"),
+      StreamingCounters.counterHittersOfClosedWindows(_, c))
+    assert(counterStream.map(r => (r.getAs[String]("member"), r.getAs[Long]("rank")))
+      .sortBy(_.swap) == byString)
+
+    assert(users(Temporal.windowHeavyHitters(df, "1 minute", k = 2).collect()) == byNumber)
+    val records = Intermediate.toHitterRecords(
+      Temporal.partialHitterState(df, "ts", "shard", "1 minute"),
+      "tie", "arn:aws:kinesis:us-east-1:000000000000:stream/agg")
+    assert(users(Intermediate.mergeHitterRecords(records, "tie", k = 2).collect()) == byNumber)
+    assert(users(streamed(
+      StreamingCounters.hitterCounts(_, "ts", "1 minute", watermarkDelay = "5 seconds"),
+      StreamingCounters.hittersOfClosedWindows(_, k = 2))) == byNumber)
   }
 
   test("streaming tumbling count emits a window once the watermark passes it") {

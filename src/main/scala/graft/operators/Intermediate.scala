@@ -74,6 +74,29 @@ object Intermediate {
         ).as("window"),
         struct(state.as(field)).as("counter_state"))).as("value"))
 
+  /** Column `state` of a `Temporal` partial, checked to be what `builder`
+    * makes: an array of structs of exactly the integer `fields`. A
+    * `value_quantile` or `heavy_hitters` counter's partial carries the same
+    * column name with other fields (`{v, n}`, `{m: string, n}`), whose key
+    * the record parse would read back as null: 0 rows, or one null-user
+    * row carrying the window total.
+    */
+  private def temporalState(partial: DataFrame, state: String, fields: Seq[String],
+                            codec: String, builder: String): Column = {
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    val found = partial.schema.find(_.name == state).map(_.dataType)
+    require(found.exists {
+      case ArrayType(s: StructType, _) =>
+        s.fieldNames.toSeq == fields && s.fields.forall(f => integral(f.dataType))
+      case _ => false
+    }, s"Intermediate.$codec expects `$state` as an array of integer structs " +
+      s"{${fields.mkString(", ")}}, as $builder builds it; got " +
+      s"${found.fold("no such column")(_.simpleString)}. A value_quantile or " +
+      "heavy_hitters counter's partial has no serialized intermediate record: " +
+      "run it two-phase through Counters.runTwoPhase")
+    col(state)
+  }
+
   private val recordSchema: StructType = StructType(Seq(
     StructField("event_source_arn", StringType),
     StructField("shard_id", StringType),
@@ -232,7 +255,8 @@ object Intermediate {
                         eventSourceArn: String,
                         counterVersion: String = ConfigLoader.EngineVersion): DataFrame =
     envelope(partial, counterId, QuantilesTypeName, eventSourceArn, counterVersion,
-      "histogram", col("partial_hist"))
+      "histogram", temporalState(partial, "partial_hist", Seq("c", "n"),
+        "toQuantileRecords", "Temporal.partialQuantileState"))
 
   /** [[parse]] for quantile records: same warn-and-skip filtering
     * (id + type tag + version gate), state lands back as `partial_hist`.
@@ -271,7 +295,8 @@ object Intermediate {
                       eventSourceArn: String,
                       counterVersion: String = ConfigLoader.EngineVersion): DataFrame =
     envelope(partial, counterId, HittersTypeName, eventSourceArn, counterVersion,
-      "counts", col("partial_counts"))
+      "counts", temporalState(partial, "partial_counts", Seq("u", "n"),
+        "toHitterRecords", "Temporal.partialHitterState"))
 
   /** [[parse]] for heavy-hitter records: the same warn-and-skip filtering
     * (id + type tag + version gate); state lands back as `partial_counts`.
@@ -308,7 +333,8 @@ object Intermediate {
                    eventSourceArn: String,
                    counterVersion: String = ConfigLoader.EngineVersion): DataFrame =
     envelope(partial, counterId, CmsTypeName, eventSourceArn, counterVersion,
-      "cells", col("partial_cells"))
+      "cells", temporalState(partial, "partial_cells", Seq("j", "b", "n"),
+        "toCmsRecords", "Temporal.partialCmsState"))
 
   /** [[parse]] for CMS records: the same warn-and-skip filtering
     * (id + type tag + version gate); state lands back as `partial_cells`.

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, Generator, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.ColumnBridge
@@ -218,7 +218,7 @@ final case class KplRecords(child: Expression)
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] =
     Deaggregate.deaggregate(child.eval(input).asInstanceOf[Array[Byte]]).map { r =>
-      InternalRow(UTF8String.fromString(r.partitionKey), r.data)
+      new GenericInternalRow(Array[Any](UTF8String.fromString(r.partitionKey), r.data))
     }
 
   override def prettyName: String = "kpl_records"

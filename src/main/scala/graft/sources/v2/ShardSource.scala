@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -450,7 +451,18 @@ final class ShardPartitionReader(shardId: String, client: ShardReaderClient,
                                  startLine: Long = 0L,
                                  endLine: Long = Long.MaxValue)
     extends PartitionReader[InternalRow] {
+  import ShardPartitionReader._
+
   private val shardUtf8 = UTF8String.fromString(shardId)
+  // each output column's source, resolved once per reader
+  private val kinds: Array[Int] = fields.map {
+    case "shard_id" => ShardId
+    case "partition_key" => PartitionKey
+    case "sequence_number" => SequenceNumber
+    case "arrival_ts" => ArrivalTs
+    case "data" => Data
+    case other => throw new IllegalArgumentException(s"unknown column $other")
+  }
   // fetch only what the pruned schema consumes — payload also when the
   // deagg explode needs it to know the row count, partition key also
   // because the deagg passthrough keeps the record's own key
@@ -479,39 +491,44 @@ final class ShardPartitionReader(shardId: String, client: ShardReaderClient,
   override def get(): InternalRow = current
   override def close(): Unit = in.close()
 
-  /** Corrupt wire record → one row with the raw bytes as `data`, so the
-    * engine's corrupt-record side channel (O4) sees it downstream.
-    */
-  private def rawRow(bytes: Array[Byte]): List[InternalRow] =
-    List(InternalRow.fromSeq(fields.toSeq.map {
-      case "shard_id" => shardUtf8
-      case "data" => bytes
-      case _ => null
-    }))
+  private def row(pk: String, seq: String, tsMicros: Any, data: Array[Byte]): InternalRow = {
+    val values = new Array[Any](kinds.length)
+    var i = 0
+    while (i < kinds.length) {
+      values(i) = kinds(i) match {
+        case ShardId => shardUtf8
+        case PartitionKey => if (pk == null) null else UTF8String.fromString(pk)
+        case SequenceNumber => if (seq == null) null else UTF8String.fromString(seq)
+        case ArrivalTs => tsMicros
+        case Data => data
+      }
+      i += 1
+    }
+    new GenericInternalRow(values)
+  }
 
   private def rows(r: WireRecord): List[InternalRow] = {
-    if (r.corrupt) return rawRow(r.data)
+    // a corrupt wire record is one row with the raw bytes as `data` (other
+    // fields null), so the engine's corrupt-record side channel (O4) sees
+    // it downstream
+    if (r.corrupt) return List(row(null, null, null, r.data))
     val tsMicros: Any =
       if (r.arrivalMillis == null) null else r.arrivalMillis.longValue() * 1000L
-    val subs =
-      if (opts.deaggregate && r.data != null)
-        Deaggregate.deaggregate(r.data).map { s =>
-          // non-KPL payloads pass through as the SAME array — keep the
-          // record's own partition key, as the reference's handler does
-          val pk = if (s.data eq r.data) r.partitionKey else s.partitionKey
-          (pk, s.data)
-        }.toList
-      else List((r.partitionKey, r.data))
-    subs.map { case (pk, data) =>
-      InternalRow.fromSeq(fields.toSeq.map {
-        case "shard_id" => shardUtf8
-        case "partition_key" => if (pk == null) null else UTF8String.fromString(pk)
-        case "sequence_number" =>
-          if (r.sequenceNumber == null) null else UTF8String.fromString(r.sequenceNumber)
-        case "arrival_ts" => tsMicros
-        case "data" => data
-        case other => throw new IllegalArgumentException(s"unknown column $other")
-      })
-    }
+    if (opts.deaggregate && r.data != null)
+      Deaggregate.deaggregate(r.data).iterator.map { s =>
+        // non-KPL payloads pass through as the SAME array — keep the
+        // record's own partition key, as the reference's handler does
+        val pk = if (s.data eq r.data) r.partitionKey else s.partitionKey
+        row(pk, r.sequenceNumber, tsMicros, s.data)
+      }.toList
+    else List(row(r.partitionKey, r.sequenceNumber, tsMicros, r.data))
   }
+}
+
+private object ShardPartitionReader {
+  final val ShardId = 0
+  final val PartitionKey = 1
+  final val SequenceNumber = 2
+  final val ArrivalTs = 3
+  final val Data = 4
 }

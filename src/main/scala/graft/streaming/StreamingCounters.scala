@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types.StructType
@@ -9,7 +10,7 @@ import org.apache.spark.sql.types.StructType
 import graft.config.{CounterDef, CounterType}
 import graft.functions.CountTables
 import graft.operators.{Counters, Intermediate}
-import graft.sources.Deaggregate
+import graft.sources.{Deaggregate, JsonRecords}
 
 /** Typed row shapes for the explicit-state path
   * ([[StreamingCounters.runCustomState]]). Top-level so `Encoder`s derive.
@@ -302,18 +303,20 @@ object StreamingCounters {
     * (`counter.go:245-248`): bad rows are reported, never fatal. The
     * output is `raw`'s columns, then `schema`'s fields, then `_corrupt`.
     *
-    * `from_json` sits behind a generator (`inline` of a one-element array)
-    * so that each record is parsed once. Expanded through a projection
-    * (`__rec.*`), Catalyst pushes [[parsedOk]]'s `_corrupt` filter below
-    * that projection and substitutes the alias, so the plan evaluates
-    * `from_json` twice per record: once in the filter, once in the
-    * projection. A filter on a generator's output stays above it.
+    * The parse is the [[JsonRecords]] generator over the STRING or BINARY
+    * payload: one row per record, the rows `from_json` gives, with the
+    * record's decoded chars handed to Jackson instead of a new stream
+    * reader per record. It is a generator, not an expression expanded
+    * through a projection (`__rec.*`), because Catalyst pushes
+    * [[parsedOk]]'s `_corrupt` filter below such a projection and
+    * substitutes the alias, so the plan would parse each record twice:
+    * once in the filter, once in the projection. A filter on a
+    * generator's output stays above it.
     */
   def parseRecords(raw: DataFrame, schema: StructType, payloadCol: String = "value"): DataFrame = {
-    val withCorrupt = schema.add("_corrupt", "string")
-    raw.select(col("*"), inline(array(
-      from_json(col(payloadCol).cast("string"), withCorrupt,
-        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt")))))
+    // bind by attribute, not by name: `col` reads a dot in a name as a field
+    val payload = raw.queryExecution.analyzed.output(raw.schema.fieldIndex(payloadCol))
+    raw.select(col("*"), ColumnBridge.column(JsonRecords(payload, schema)))
   }
 
   /** O3+O4 composed, the reference's exact ingest order: KPL-deaggregate

@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.config.{CounterDef, CounterType}
@@ -252,6 +253,27 @@ class CountersSpec extends SparkTestBase {
       val msg = intercept[IllegalArgumentException](entry(c)).getMessage
       assert(msg.contains("Counters.runTwoPhase"), s"$name, ${c.counterType.name}: $msg")
       assert(temporalCodec.findFirstIn(msg).isEmpty, s"$name, ${c.counterType.name}: $msg")
+    }
+  }
+
+  test("the Temporal record codecs refuse a counter's partial and say runTwoPhase") {
+    import graft.operators.Intermediate
+    // the counter partials reuse the column names partial_hist/partial_counts
+    // with {v, n} / {m: string, n} entries: read back as {c, n} / {u, n} they
+    // returned 0 rows, or one null-user row carrying the window total
+    val arn = "arn:aws:kinesis:us-east-1:000000000000:stream/agg"
+    val codecs: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "toQuantileRecords" -> (p => Intermediate.toQuantileRecords(p, "x", arn)),
+      "toHitterRecords" -> (p => Intermediate.toHitterRecords(p, "x", arn)),
+      "toCmsRecords" -> (p => Intermediate.toCmsRecords(p, "x", arn)))
+    for (c <- Seq(
+           CounterDef("q", CounterType.ValueQuantile, Some("user_id"), windowDuration = "1 minute"),
+           CounterDef("h", CounterType.HeavyHitters, Some("user_id"), windowDuration = "1 minute"));
+         (name, codec) <- codecs) {
+      val partial = Counters.partialState(synth, "ts", "shard", c)
+      val msg = intercept[IllegalArgumentException](codec(partial)).getMessage
+      assert(msg.contains(s"Intermediate.$name") && msg.contains("Counters.runTwoPhase"),
+        s"${c.counterType.name} through $name: $msg")
     }
   }
 

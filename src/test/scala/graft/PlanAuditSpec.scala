@@ -190,7 +190,9 @@ class PlanAuditSpec extends SparkTestBase {
       val p = plan(ok)
       // a `_corrupt` filter pushed through a `__rec.*` projection evaluates
       // the parse twice, and the row-count accumulator cannot see it
-      assert("from_json\\(".r.findAllIn(p).size == 1, s"expected one JSON parse:\n$p")
+      assert("json_records\\(".r.findAllIn(p).size == 1, s"expected one JSON parse:\n$p")
+      assert(!p.contains("from_json(") && !p.contains("inline("),
+        s"the parse must be the json_records generator alone:\n$p")
       assert(!p.contains("DeserializeToObject") && !p.contains("MapPartitions"),
         s"the explode must not round-trip rows through objects:\n$p")
       assert(p.contains("ReadSchema: struct<shard_id:string,data:binary>"),
